@@ -144,6 +144,7 @@ object Bench {
     }
     val times = scala.collection.mutable
       .Map[String, Vector[Double]]().withDefaultValue(Vector())
+    val failed = scala.collection.mutable.Set[String]()
     def timed(n: String): Unit = {
       // JMH-style inter-iteration GC, OUTSIDE the timed window: a
       // query otherwise pays its predecessors' garbage (measured:
@@ -157,15 +158,17 @@ object Bench {
         times(n) = times(n) :+ (System.nanoTime() - t0) / 1e9
       } catch {
         // a target-scale-only failure (small-sf warmup can't see it):
-        // drop the query to -1 like a warmup failure, keep the suite
+        // stop timing the query and keep the suite. Samples from
+        // earlier rounds stand; with none it drops to -1 like a warmup
+        // failure.
         case e: Throwable =>
           System.err.println(s"[bench] $n failed at $sfDir: ${e.getMessage}")
-          ok -= n
-          times.remove(n)
+          if (times(n).isEmpty) ok -= n
+          failed += n
       }
       storageLine(n)
     }
-    for (_ <- 1 to rounds; n <- names if ok(n)) timed(n)
+    for (_ <- 1 to rounds; n <- names if ok(n) && !failed(n)) timed(n)
     def median(v: Vector[Double]): Double = {
       val s = v.sorted
       if (s.size % 2 == 1) s(s.size / 2)
@@ -188,7 +191,7 @@ object Bench {
     val extraRounds = math.max(0,
       sys.env.getOrElse("SPARK_GRAFT_EXTRA_ROUNDS", "1").toInt)
     val heavy = names.filter(n => ok(n) && median(times(n)) > 2.0)
-    for (_ <- 1 to extraRounds; n <- heavy) timed(n)
+    for (_ <- 1 to extraRounds; n <- heavy if !failed(n)) timed(n)
     val med = names.map(n => n -> (if (ok(n)) median(times(n)) else -1.0))
     val total = med.collect { case (_, v) if v >= 0 => v }.sum
     val madPct = names.map(n => n -> (

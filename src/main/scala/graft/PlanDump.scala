@@ -68,8 +68,8 @@ object PlanDump {
         val df = SparkEntry.queries(n)(spark, sfDir)
         val finalPlan = df.queryExecution.explainString(FormattedMode)
         df.write.format("noop").mode("overwrite").save()
+        org.apache.spark.GraftBus.drain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(listener)
-        Thread.sleep(300) // async listener bus drain
         val sb = new java.lang.StringBuilder
         sb.append(s"== $n: final frame (static explain) ==\n")
         sb.append(finalPlan).append('\n')

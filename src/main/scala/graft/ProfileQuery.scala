@@ -69,9 +69,8 @@ object ProfileQuery {
         val t0 = System.nanoTime()
         run()
         val wall = (System.nanoTime() - t0) / 1e9
+        org.apache.spark.GraftBus.drain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(listener)
-        // listener bus is async; give it a beat to drain
-        Thread.sleep(300)
         println(s"== $n wall ${math.round(wall * 1000) / 1000.0} s " +
           s"jobs=${jobs.size}")
         println(out.toString)

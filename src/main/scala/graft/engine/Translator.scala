@@ -16,7 +16,9 @@ import graft.functions.{BuiltinFunctions, FullText, FunctionRegistry}
   *    Spark's auto-broadcast/AQE, nothing is collected to the driver;
   *  - multi-links (LINKLIST) aggregate the target side BEFORE the join
   *    (map-side combinable `collect_list`), so the join is 1:1;
-  *  - TRAVERSE is an iterative frontier expansion of (origin, node)
+  *  - TRAVERSE flags base rows by left joins: bounded shallow forms
+  *    against per-link key sets from reverse reachability, the rest
+  *    against the origins of a frontier expansion of (origin, node)
   *    id-pair DataFrames — state stays distributed, the driver only
   *    drives the loop (SURVEY.md §2.3 TRAVERSE).
   */
@@ -258,17 +260,31 @@ final class Translator(val catalog: Catalog, val registry: FunctionRegistry) {
         s"TRAVERSE requires a keyed class, ${cls.name} has none"))
       val flag = s"__trav_$travCount"
       travCount += 1
-      val matched = Traverse.matchedOrigins(
-        catalog, cls, tc, maxTraverseDepth, compileCondLenient)
-      df = df.join(
-        matched.withColumnRenamed("__origin", s"${flag}_k")
-          .withColumn(flag, lit(true)),
-        col(key) === col(s"${flag}_k"), "left")
-        .drop(s"${flag}_k")
-      travFlags(tc) = flag
+      /** left-join a distinct key set onto the base rows as a flag */
+      def flagBy(srcKey: String, keys: DataFrame, name: String): Column = {
+        df = df.join(keys.select(col(keys.columns.head).as(s"${name}_k"))
+            .withColumn(name, lit(true)),
+          col(srcKey) === col(s"${name}_k"), "left")
+          .drop(s"${name}_k")
+        coalesce(col(name), lit(false))
+      }
+      travFlags(tc) = Traverse.reach(catalog, cls, tc, compileCondLenient) match {
+        case Some(r) =>
+          // one left join per first-hop link, on the link's srcKey
+          val self =
+            if (r.self) Seq(coalesce(compileCondLenient(df, cls, tc.inner), lit(false)))
+            else Nil
+          val hops = r.firstHops.zipWithIndex.map { case ((l, keys), i) =>
+            flagBy(l.srcKey, keys, s"${flag}_$i")
+          }
+          (self ++ hops).reduceOption(_ || _).getOrElse(lit(false))
+        case None =>
+          flagBy(key, Traverse.matchedOrigins(
+            catalog, cls, tc, maxTraverseDepth, compileCondLenient), flag)
+      }
     }
 
-    val travFlags = scala.collection.mutable.Map[TraverseCond, String]()
+    val travFlags = scala.collection.mutable.Map[TraverseCond, Column]()
 
     def scope: Scope = new Scope {
       val planner = JoinPlanner.this
@@ -276,8 +292,7 @@ final class Translator(val catalog: Catalog, val registry: FunctionRegistry) {
       def baseColumns: Seq[String] = baseCols.filterNot(internal)
       def chainInfo(chain: List[String]): Option[(String, ClassDef, Boolean)] =
         chains.get(chain)
-      def traverseFlag(tc: TraverseCond): Column =
-        coalesce(col(travFlags(tc)), lit(false))
+      def traverseFlag(tc: TraverseCond): Column = travFlags(tc)
       def resolveField(name: String): Option[Column] =
         baseCols.find(_.equalsIgnoreCase(name)).map(col)
       def schemaOf(name: String): Option[DataType] =

@@ -1,6 +1,8 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, Or}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
 
 /** Distributed TRAVERSE (`OQueryOperatorTraverse.java:40-176`): true for
@@ -8,30 +10,37 @@ import org.apache.spark.sql.functions._
   * `[start, end]` satisfies the inner condition; cycle-safe via a
   * visited set; `end = -1` = unbounded.
   *
-  * The reference recurses per-record on the driver thread with an
-  * in-memory visited set. Here the whole frontier is a DataFrame of
-  * `(origin, node)` id pairs per class — each expansion round is one
-  * distributed join, so a 100 TB graph never funnels through the
-  * driver; the driver only runs the (bounded) loop.
+  * Two plans, picked per condition:
+  *  - [[reach]]: bounded traversals with `start <= 1` and `end <= 3`
+  *    compile to REVERSE reachability over key sets — the keys of each
+  *    class that satisfy the condition, walked backwards over the links
+  *    one semi-join per hop. Relations stay as small as the key sets;
+  *    no `(origin, node)` pair is ever built.
+  *  - [[matchedOrigins]]: everything else (`start >= 2`, deep or
+  *    unbounded traversals, and the cases [[reach]] declines) runs a
+  *    forward BFS whose frontier is a DataFrame of `(origin, node)` id
+  *    pairs per class — each expansion round is one distributed join,
+  *    so a 100 TB graph never funnels through the driver; the driver
+  *    only runs the (bounded) loop.
   *
   * Depth semantics (documented deviation from the reference's
   * collection-vs-single-link level quirk): the record itself is depth
   * 0; following any link costs 1. `fields` (when given) restricts which
   * link fields are followed at every level; a non-`any()` left field
-  * restricts only the first hop.
+  * restricts only the first hop. Nodes are identified by (class, key).
   */
 object Traverse {
 
-  /** @return single-column DataFrame `__origin`: keys of base-class
-    *         rows whose traversal matched. */
-  def matchedOrigins(
-      catalog: Catalog,
-      baseCls: ClassDef,
-      tc: Ast.TraverseCond,
-      maxDepth: Int,
-      compileCond: (DataFrame, ClassDef, Ast.Cond) => Column): DataFrame = {
+  /** Test/measurement switch: both plans fall back to the per-round
+    * checkpointed BFS, the reference the other plans are checked
+    * against (`TraverseSpec`). Never set in production paths. */
+  private def forceBfs: Boolean =
+    System.getProperty("graft.traverse.forceBfs") != null
 
-    val key0 = baseCls.ridPosCol.get
+  /** Links followed from a node of `cls` at `depth`, after validating
+    * the links the statement names explicitly. */
+  private def hopLinks(catalog: Catalog, baseCls: ClassDef,
+      tc: Ast.TraverseCond): (ClassDef, Int) => Seq[LinkSpec] = {
     val fieldFilter: Option[Set[String]] =
       if (tc.fields.nonEmpty)
         Some(tc.fields.map(_.toLowerCase).toSet.filterNot(_ == "any()"))
@@ -54,7 +63,7 @@ object Traverse {
               s"'${l.target}' has no key column")
       }
 
-    def links(cls: ClassDef, depth: Int): Seq[LinkSpec] = {
+    (cls, depth) => {
       val all = cls.links.filter(l => catalog.get(l.target).ridPosCol.isDefined)
       val byFields = fieldFilter match {
         case Some(fs) => all.filter(l => fs.contains(l.field.toLowerCase))
@@ -65,6 +74,149 @@ object Traverse {
         case None => byFields
       } else byFields
     }
+  }
+
+  /** A bounded traversal as reverse reachability: a base row matches
+    * when `self` holds and the inner condition is true on the row
+    * itself (`start = 0`), or when, for one of the first-hop links, its
+    * `srcKey` value is among that link's distinct dst-key values. Each
+    * row is flagged by its own link values, where the BFS pools those
+    * of all base rows sharing a key: the same answer while keys are
+    * unique within the class. */
+  final case class Reach(self: Boolean, firstHops: Seq[(LinkSpec, DataFrame)])
+
+  /** The [[Reach]] plan, or None when only the BFS is exact.
+    *
+    * With `start <= 1` the BFS's visited set only decides the depth at
+    * which a node is first seen, so "some hit within `end` hops" gives
+    * the same answer — provided (a) no origin can be its own hit
+    * (`start = 1`: the condition is dead on the base class and its
+    * superclasses) and (b) a walk that comes back to its origin cannot
+    * then leave it over a link the first hop excludes (the BFS never
+    * re-expands the origin). RID-collection first hops, whose
+    * membership test needs the array exploded per base row, also stay
+    * on the BFS.
+    *
+    * A class is dead when its compiled condition folds to null or false
+    * on its polymorphic scan — decided from the analyzed plan, no job.
+    * Dead classes and links that cannot reach a live class within the
+    * remaining depth are never built. */
+  def reach(
+      catalog: Catalog,
+      baseCls: ClassDef,
+      tc: Ast.TraverseCond,
+      compileCond: (DataFrame, ClassDef, Ast.Cond) => Column): Option[Reach] = {
+    val links = hopLinks(catalog, baseCls, tc)
+    val end = tc.end
+    if (forceBfs || tc.start > 1 || end < tc.start || end > 3) return None
+
+    val deadMemo = scala.collection.mutable.Map[String, Boolean]()
+    def dead(cn: String): Boolean = deadMemo.getOrElseUpdate(cn.toLowerCase, {
+      val t = catalog.polymorphicScan(cn)
+      t.filter(compileCond(t, catalog.get(cn), tc.inner))
+        .queryExecution.analyzed match {
+          case f: Filter => neverTrue(f.condition)
+          case _ => false
+        }
+    })
+    // (a)
+    if (tc.start == 1 &&
+        catalog.superChain(baseCls.name).exists(c => !dead(c.name)))
+      return None
+
+    val firstHops = if (end == 0) Nil else links(baseCls, 0)
+    if (firstHops.toSet != links(baseCls, 1).toSet) {
+      // (b): the first hop is restricted; decline when the base class
+      // is among the classes expanded at depths 1 .. end-1
+      var layer = firstHops.map(_.target.toLowerCase).toSet
+      var expanded = Set.empty[String]
+      (1 until end).foreach { d =>
+        expanded ++= layer
+        layer = layer.flatMap(cn => links(catalog.get(cn), d))
+          .map(_.target.toLowerCase)
+      }
+      if (expanded.contains(baseCls.name.toLowerCase)) return None
+    }
+
+    val reachMemo = scala.collection.mutable.Map[(String, Int), Boolean]()
+    def canReach(cn: String, j: Int): Boolean =
+      reachMemo.getOrElseUpdate((cn.toLowerCase, j), !dead(cn) ||
+        (j > 0 && links(catalog.get(cn), 1).exists(l => canReach(l.target, j - 1))))
+    val used = firstHops.filter(l => canReach(l.target, end - 1))
+    if (used.exists(_.srcIsArray)) return None
+
+    def key(cls: ClassDef): String = cls.ridPosCol.get
+
+    // Key sets feed semi-joins, which ignore duplicates; only the
+    // first-hop sets, which the translator left-joins onto base rows,
+    // are made distinct — one aggregate per query, not one per hop.
+
+    /** `__key`s of `cn` with a hit within `j` hops */
+    def within(cn: String, j: Int): DataFrame = {
+      val cls = catalog.get(cn)
+      val own =
+        if (dead(cn)) None
+        else {
+          val t = catalog.polymorphicScan(cn)
+          Some(t.filter(compileCond(t, cls, tc.inner))
+            .select(col(key(cls)).as("__key")))
+        }
+      val back =
+        if (j == 0) Nil
+        else links(cls, 1).filter(l => canReach(l.target, j - 1))
+          .map(l => sources(cls, l, dstKeys(l, within(l.target, j - 1))))
+      (own.toSeq ++ back).reduce(_ unionByName _)
+    }
+
+    /** `dstKey` values (as `__key`) of the target rows in `keys`; the
+      * keys themselves when the link lands on the target's key */
+    def dstKeys(l: LinkSpec, keys: DataFrame): DataFrame = {
+      val target = catalog.get(l.target)
+      if (l.dstKey.equalsIgnoreCase(key(target))) keys
+      else catalog.polymorphicScan(l.target)
+        .select(col(key(target)).as("__tk"), col(l.dstKey).as("__dk"))
+        .join(keys, col("__tk") === col("__key"), "left_semi")
+        .select(col("__dk").as("__key"))
+    }
+
+    /** keys of `cls` rows whose `l` link lands on one of `dst` — one
+      * semi-join; RID-collection links test each array element */
+    def sources(cls: ClassDef, l: LinkSpec, dst: DataFrame): DataFrame = {
+      val sk = if (l.srcIsArray) explode(col(l.srcKey)) else col(l.srcKey)
+      catalog.polymorphicScan(cls.name)
+        .select(col(key(cls)).as("__src"), sk.as("__sk"))
+        .join(dst, col("__sk") === col("__key"), "left_semi")
+        .select(col("__src").as("__key"))
+    }
+
+    Some(Reach(tc.start == 0,
+      used.map(l => l -> dstKeys(l, within(l.target, end - 1)).distinct())))
+  }
+
+  /** true when `e` can never evaluate to true: a foldable null/false,
+    * or a conjunction/disjunction that is one by three-valued logic */
+  private def neverTrue(e: Expression): Boolean = e match {
+    case And(l, r) => neverTrue(l) || neverTrue(r)
+    case Or(l, r) => neverTrue(l) && neverTrue(r)
+    case _ if e.foldable =>
+      try {
+        val v = e.eval()
+        v == null || v == false
+      } catch { case scala.util.control.NonFatal(_) => false }
+    case _ => false
+  }
+
+  /** @return single-column DataFrame `__origin`: keys of base-class
+    *         rows whose traversal matched. */
+  def matchedOrigins(
+      catalog: Catalog,
+      baseCls: ClassDef,
+      tc: Ast.TraverseCond,
+      maxDepth: Int,
+      compileCond: (DataFrame, ClassDef, Ast.Cond) => Column): DataFrame = {
+
+    val key0 = baseCls.ridPosCol.get
+    val links = hopLinks(catalog, baseCls, tc)
 
     // unbounded (-1) runs to the visited-set fixpoint like the
     // reference (`OQueryOperatorTraverse.java:40-176` recurses until no
@@ -76,16 +228,14 @@ object Traverse {
     val unbounded = tc.end < 0
     val end = if (unbounded) Int.MaxValue else tc.end
 
-    // BOUNDED shallow traversals (the common `traverse(1,2)` shape)
-    // compile to one STATIC lazy plan: no per-round materialization,
+    // BOUNDED shallow traversals that [[reach]] declines (`start >= 2`,
+    // a live base class, RID-collection first hops) compile to one
+    // STATIC lazy plan: no per-round materialization,
     // no frontier-emptiness probe jobs — a handful of joins Catalyst
     // optimizes as a whole (exchange reuse dedups the repeated scans).
     // Deep/unbounded traversals keep the checkpointed BFS below, whose
     // per-round lineage truncation is what survives 10+ rounds.
-    // The system property is a measurement-only escape (ScratchR10's
-    // static-vs-BFS A/B) — never set in production paths.
-    val static = end <= 3 &&
-      System.getProperty("graft.traverse.forceBfs") == null
+    val static = end <= 3 && !forceBfs
 
     // per-class frontier/visited of (__origin, __node) pairs
     var frontier: Map[String, DataFrame] = {

@@ -439,9 +439,6 @@ object GraphOps {
             col("b") < col("__ob"))
           changed = if (eagerProbe) !chg.isEmpty else chg.count() > 0
           lab = next.select(col("id"), col("f"), col("b"))
-          if (sys.env.contains("SPARK_GRAFT_SCC_DEBUG"))
-            System.err.println(s"[scc] outer=$outer inner=$inner " +
-              s"changed=$changed t=${System.nanoTime() / 1000000}")
         }
         // re-class by (cls, f, b). CERTIFICATION, both final same round:
         //  - a group with f == b == m IS exactly SCC(m): members reach m

@@ -133,6 +133,10 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("LogicalRDD"),
       s"bounded traverse must not checkpoint per round:\n$p")
     assert(p.contains("Join"), p)
+    // reverse reachability over key sets: no (origin, node) pair
+    // relation is built, let alone aggregated
+    assert(!p.contains("__origin") && !p.contains("__node"),
+      s"bounded traverse must not build origin/node pairs:\n$p")
   }
 
   test("banded range join stays an equi-join, never a cross product") {
@@ -315,7 +319,7 @@ class PlanShapeSpec extends AnyFunSuite {
     spark.listenerManager.register(l)
     try {
       body
-      org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(l)
     import scala.jdk.CollectionConverters._
     plans.asScala.toSeq
