@@ -15,12 +15,18 @@ import graft.functions.{BuiltinFunctions, FullText, FunctionRegistry}
   *    becomes equi-joins — dimension-sized targets broadcast via
   *    Spark's auto-broadcast/AQE, nothing is collected to the driver;
   *  - multi-links (LINKLIST) aggregate the target side BEFORE the join
-  *    (map-side combinable `collect_list`), so the join is 1:1;
+  *    (map-side combinable `collect_list`), so the join is 1:1; a
+  *    top-level positive `link CONTAINS (cond)` whose link nothing else
+  *    reads is a left-semi join against the matching target keys;
   *  - TRAVERSE flags base rows by left joins: bounded shallow forms
   *    against per-link key sets from reverse reachability, the rest
   *    against the origins of a frontier expansion of (origin, node)
   *    id-pair DataFrames — state stays distributed, the driver only
-  *    drives the loop (SURVEY.md §2.3 TRAVERSE).
+  *    drives the loop (SURVEY.md §2.3 TRAVERSE). A top-level positive
+  *    TRAVERSE with one first-hop key set and no `self` term is a
+  *    left-semi join against that set instead;
+  *  - ORDER BY without LIMIT over broadcast-sized inputs sorts in one
+  *    task; otherwise it is Spark's global (range-partitioned) sort.
   */
 final class Translator(val catalog: Catalog, val registry: FunctionRegistry) {
   import Ast._
@@ -40,15 +46,21 @@ final class Translator(val catalog: Catalog, val registry: FunctionRegistry) {
       applyFulltextIndex(scan0, clsOpt, stmt.where, stmt.target)
     val planner = new JoinPlanner(scan, clsOpt)
 
-    // pre-resolve link joins + traverse flags for every path in the stmt
-    residualWhere.foreach(planner.prepareCond)
+    // pre-resolve link joins + traverse flags for every path in the
+    // stmt; top-level CONTAINS conjuncts go last, so one only becomes a
+    // semi-join when nothing else in the statement reads its link
+    val conjuncts = residualWhere.toList.flatMap(conjunctsOf)
+    val (contains, others) = conjuncts.partition(_.isInstanceOf[ContainsCond])
+    val joined = others.filter(planner.planConjunct).toSet
     stmt.projections.foreach(p => planner.prepareExpr(p.expr))
     stmt.orderBy.foreach(o => planner.prepareExpr(o.expr))
+    val semiJoined = joined ++ contains.filter(planner.planConjunct)
 
     var df = planner.df
     val scope = planner.scope
 
-    residualWhere.foreach { c => df = df.filter(compileCond(c, scope)) }
+    conjuncts.filterNot(semiJoined).reduceOption(And(_, _))
+      .foreach { c => df = df.filter(compileCond(c, scope)) }
 
     stmt.range.foreach { case (from, to) =>
       // RANGE pushdown (§2.1): keyset pagination on the _rid ordering
@@ -60,18 +72,36 @@ final class Translator(val catalog: Catalog, val registry: FunctionRegistry) {
     // ORDER BY before projection: Catalyst keeps ordering through the
     // subsequent narrow select; LIMIT after sort = correct top-k
     // (deliberate deviation from the reference's pre-sort truncation,
-    // SURVEY.md §2.8).
+    // SURVEY.md §2.8). Without a LIMIT, inputs small enough to
+    // broadcast sort in one task: no sample job, no range exchange.
     if (stmt.orderBy.nonEmpty) {
       val sortCols = stmt.orderBy.map { o =>
         val c = compileExpr(o.expr, scope)
         if (o.asc) c.asc else c.desc
       }
-      df = df.orderBy(sortCols: _*)
+      df = if (stmt.limit.isEmpty && broadcastSized(df))
+        df.coalesce(1).sortWithinPartitions(sortCols: _*)
+      else df.orderBy(sortCols: _*)
     }
 
     df = applyProjections(df, stmt.projections, scope)
     stmt.limit.foreach(n => df = df.limit(n))
     df
+  }
+
+  /** true when the leaf relations of `df`'s analyzed plan sum to at
+    * most `spark.sql.autoBroadcastJoinThreshold`: inputs Spark would
+    * already ship whole to every executor. A disabled threshold (<= 0)
+    * or an unknown size (the default estimate) reads as too large. */
+  private def broadcastSized(df: DataFrame): Boolean = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    threshold > 0 && df.queryExecution.analyzed.collectLeaves()
+      .map(_.stats.sizeInBytes).sum <= threshold
+  }
+
+  private def conjunctsOf(c: Cond): List[Cond] = c match {
+    case And(l, r) => conjunctsOf(l) ++ conjunctsOf(r)
+    case other => List(other)
   }
 
   // ------------------------------------------------------------ scans
@@ -120,12 +150,8 @@ final class Translator(val catalog: Catalog, val registry: FunctionRegistry) {
           catalog.subclassesOf(c.name).isEmpty => c
       case _ => return (scan, where)
     }
-    def conjuncts(c: Cond): List[Cond] = c match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => List(other)
-    }
     var df = scan
-    val residual = conjuncts(where.get).filter {
+    val residual = conjunctsOf(where.get).filter {
       case Cmp(Path(List(FieldSeg(f))), "containstext", Lit(text: String))
           if catalog.fulltextIndexed(cls.name, f) &&
             scan.columns.exists(_.equalsIgnoreCase(f)) =>
@@ -253,22 +279,62 @@ final class Translator(val catalog: Catalog, val registry: FunctionRegistry) {
         (prefix, catalog.get(spec.target), spec.multi || spec.srcIsArray)
     }
 
-    private def prepareTraverse(tc: TraverseCond): Unit = {
+    /** Plans one top-level WHERE conjunct. A positive `link CONTAINS
+      * (cond)` over a LINKLIST that nothing else in the statement reads,
+      * and a TRAVERSE with one first hop and no `self` term, become
+      * left-semi joins (true: the conjunct needs no filter); anything
+      * else gets its joins and flags prepared (false). Exact for a
+      * WHERE conjunct: the filter drops a null the same as a false. */
+    def planConjunct(c: Cond): Boolean = c match {
+      case ContainsCond(Path(FieldSeg(f) :: Nil), inner, false)
+          if !chains.contains(List(f.toLowerCase)) && !readsOuterRow(inner) &&
+            baseCls.flatMap(catalog.linkOf(_, f))
+              .exists(l => l.multi && !l.srcIsArray) =>
+        val spec = catalog.linkOf(baseCls.get, f).get
+        val target = catalog.table(spec.target)
+        // the inner condition sees each target row as the element
+        // struct `exists` sees on the aggregated path
+        val cols = target.columns.filterNot(internalCol).toSeq
+        val hit = compileCond(inner,
+          new ElementScope(struct(cols.map(col): _*), Some(cols)))
+        semiJoin(spec.srcKey, target.filter(hit).select(col(spec.dstKey)))
+        true
+      case tc: TraverseCond => prepareTraverse(tc, topLevel = true)
+      case other => prepareCond(other); false
+    }
+
+    private var semiCount = 0
+    /** keep the base rows whose `srcKey` is among `keys`' first column;
+      * duplicate keys are harmless, so no distinct */
+    private def semiJoin(srcKey: String, keys: DataFrame): Unit = {
+      val k = s"__semi_$semiCount"
+      semiCount += 1
+      df = df.join(keys.select(col(keys.columns.head).as(k)),
+        col(srcKey) === col(k), "left_semi")
+    }
+
+    /** @return true when `topLevel` and the traversal became a semi-join
+      *         (no flag column is set) */
+    private def prepareTraverse(tc: TraverseCond,
+        topLevel: Boolean = false): Boolean = {
       val cls = baseCls.getOrElse(throw Parser.ParseException(
         "TRAVERSE requires a class target"))
       val key = cls.ridPosCol.getOrElse(throw Parser.ParseException(
         s"TRAVERSE requires a keyed class, ${cls.name} has none"))
       val flag = s"__trav_$travCount"
       travCount += 1
-      /** left-join a distinct key set onto the base rows as a flag */
+      /** left-join the distinct key set onto the base rows as a flag */
       def flagBy(srcKey: String, keys: DataFrame, name: String): Column = {
         df = df.join(keys.select(col(keys.columns.head).as(s"${name}_k"))
-            .withColumn(name, lit(true)),
+            .distinct().withColumn(name, lit(true)),
           col(srcKey) === col(s"${name}_k"), "left")
           .drop(s"${name}_k")
         coalesce(col(name), lit(false))
       }
-      travFlags(tc) = Traverse.reach(catalog, cls, tc, compileCondLenient) match {
+      Traverse.reach(catalog, cls, tc, compileCondLenient) match {
+        case Some(Traverse.Reach(false, Seq((l, keys)))) if topLevel =>
+          semiJoin(l.srcKey, keys)
+          true
         case Some(r) =>
           // one left join per first-hop link, on the link's srcKey
           val self =
@@ -277,10 +343,12 @@ final class Translator(val catalog: Catalog, val registry: FunctionRegistry) {
           val hops = r.firstHops.zipWithIndex.map { case ((l, keys), i) =>
             flagBy(l.srcKey, keys, s"${flag}_$i")
           }
-          (self ++ hops).reduceOption(_ || _).getOrElse(lit(false))
+          travFlags(tc) = (self ++ hops).reduceOption(_ || _).getOrElse(lit(false))
+          false
         case None =>
-          flagBy(key, Traverse.matchedOrigins(
+          travFlags(tc) = flagBy(key, Traverse.matchedOrigins(
             catalog, cls, tc, maxTraverseDepth, compileCondLenient), flag)
+          false
       }
     }
 
@@ -305,6 +373,32 @@ final class Translator(val catalog: Catalog, val registry: FunctionRegistry) {
   private def internalCol(c: String): Boolean =
     c.startsWith("__l_") || c.startsWith("__trav_") ||
       c == "_rid" || c == "_class" || c == "_version" || c == "_extra"
+
+  /** true when a CONTAINS inner condition compiles to columns of the
+    * outer row rather than of the element: record attributes, `any()`,
+    * `all()` and `column(n)` read the row the `exists` lambda runs on */
+  private def readsOuterRow(c: Cond): Boolean = {
+    def expr(e: SqlExpr): Boolean = e match {
+      case Path(segs) => segs.exists {
+        case AttrSeg(_) => true
+        case MethodSeg(m, args) =>
+          m == "any" || m == "all" || m == "column" || args.exists(expr)
+        case _ => false
+      }
+      case ListLit(items) => items.exists(expr)
+      case _ => false
+    }
+    c match {
+      case And(l, r) => readsOuterRow(l) || readsOuterRow(r)
+      case Or(l, r) => readsOuterRow(l) || readsOuterRow(r)
+      case Not(i) => readsOuterRow(i)
+      case Cmp(l, _, r) => expr(l) || expr(r)
+      case IsNull(e, _) => expr(e)
+      case BareBool(e) => expr(e)
+      case ContainsCond(p, inner, _) => expr(p) || readsOuterRow(inner)
+      case _: TraverseCond => true
+    }
+  }
 
   // ========================================================== scopes
   /** name resolution context for expression compilation */

@@ -79,10 +79,10 @@ object Traverse {
   /** A bounded traversal as reverse reachability: a base row matches
     * when `self` holds and the inner condition is true on the row
     * itself (`start = 0`), or when, for one of the first-hop links, its
-    * `srcKey` value is among that link's distinct dst-key values. Each
-    * row is flagged by its own link values, where the BFS pools those
-    * of all base rows sharing a key: the same answer while keys are
-    * unique within the class. */
+    * `srcKey` value is among that link's dst-key values (a key may
+    * repeat). Each row is flagged by its own link values, where the BFS
+    * pools those of all base rows sharing a key: the same answer while
+    * keys are unique within the class. */
   final case class Reach(self: Boolean, firstHops: Seq[(LinkSpec, DataFrame)])
 
   /** The [[Reach]] plan, or None when only the BFS is exact.
@@ -147,9 +147,9 @@ object Traverse {
 
     def key(cls: ClassDef): String = cls.ridPosCol.get
 
-    // Key sets feed semi-joins, which ignore duplicates; only the
-    // first-hop sets, which the translator left-joins onto base rows,
-    // are made distinct — one aggregate per query, not one per hop.
+    // Key sets feed semi-joins, which ignore duplicates; none is made
+    // distinct here — the translator does that only where it left-joins
+    // a first-hop set onto base rows as a flag.
 
     /** `__key`s of `cn` with a hit within `j` hops */
     def within(cn: String, j: Int): DataFrame = {
@@ -190,7 +190,7 @@ object Traverse {
     }
 
     Some(Reach(tc.start == 0,
-      used.map(l => l -> dstKeys(l, within(l.target, end - 1)).distinct())))
+      used.map(l => l -> dstKeys(l, within(l.target, end - 1)))))
   }
 
   /** true when `e` can never evaluate to true: a foldable null/false,
@@ -207,7 +207,7 @@ object Traverse {
   }
 
   /** @return single-column DataFrame `__origin`: keys of base-class
-    *         rows whose traversal matched. */
+    *         rows whose traversal matched, a key possibly repeated. */
   def matchedOrigins(
       catalog: Catalog,
       baseCls: ClassDef,
@@ -341,6 +341,6 @@ object Traverse {
     if (matchedParts.isEmpty)
       // empty result with the right schema
       catalog.table(baseCls.name).select(col(key0).as("__origin")).limit(0)
-    else matchedParts.reduce(_ unionByName _).distinct()
+    else matchedParts.reduce(_ unionByName _)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -129,7 +130,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // checkpoints: the whole traversal is a lazy join tree over fresh
     // parquet scans. A LogicalRDD in the plan means a localCheckpoint
     // materialized mid-build — the static path regressed.
-    val p = df("qd_traverse").queryExecution.optimizedPlan.toString
+    val opt = df("qd_traverse").queryExecution.optimizedPlan
+    val p = opt.toString
     assert(!p.contains("LogicalRDD"),
       s"bounded traverse must not checkpoint per round:\n$p")
     assert(p.contains("Join"), p)
@@ -137,6 +139,11 @@ class PlanShapeSpec extends AnyFunSuite {
     // relation is built, let alone aggregated
     assert(!p.contains("__origin") && !p.contains("__node"),
       s"bounded traverse must not build origin/node pairs:\n$p")
+    // one first hop (nation) at the top level: a semi-join against its
+    // key set, which needs no distinct
+    assert(p.contains("LeftSemi"), p)
+    assert(opt.collect { case a: Aggregate => a }.isEmpty,
+      s"the traverse key sets must not be aggregated:\n$p")
   }
 
   test("banded range join stays an equi-join, never a cross product") {

@@ -124,6 +124,34 @@ class TraverseSpec extends AnyFunSuite {
       "(name = 'p5') order by pid", reach = false).nonEmpty)
   }
 
+  /** true when the traversal is a left-semi join, with no flag column */
+  private def semiJoined(df: DataFrame): Boolean =
+    !df.queryExecution.optimizedPlan.toString.contains("__trav_")
+
+  test("a top-level single-hop traverse is a semi-join; others keep the flag") {
+    val asia = "any() traverse(1,2) (r_name = 'ASIA')"
+    def check(cond: String, semi: Boolean): Seq[Row] = {
+      val q = s"select c_custkey from customer where $cond order by c_custkey"
+      val df = tpch.query(q)
+      assert(semiJoined(df) == semi, s"$q:\n${df.queryExecution.optimizedPlan}")
+      val got = tpchQ(cond, reach = true)
+      assert(got.distinct == got, s"$q: duplicated base rows")
+      got
+    }
+    val one = check(asia, semi = true)
+    assert(one.nonEmpty)
+    assert(check(s"c_acctbal > 0 and $asia", semi = true).size < one.size)
+    // OR, NOT, a `self` term (start 0) and two first hops (nation reaches
+    // region, orders is live itself) keep the distinct flag join
+    assert(check(s"($asia or c_acctbal > 9000)", semi = false).size > one.size)
+    val not = check(s"not ($asia)", semi = false)
+    assert(not.size + one.size == tpch.query("select from customer").count())
+    assert(check("any() traverse(0,2) (r_name = 'ASIA' or c_acctbal > 9000)",
+      semi = false).size > one.size)
+    assert(check("any() traverse(1,2) (r_name = 'ASIA' or " +
+      "o_totalprice > 400000)", semi = false).size > one.size)
+  }
+
   test("a condition live on the base class falls back to the BFS") {
     // the BFS never counts the origin itself at start 1, even where a
     // friend cycle leads back to it
