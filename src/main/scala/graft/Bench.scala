@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark harness (BASELINE.md methodology: warm JVM, median of
   * repeated runs — the first execution of each query pays one-time
@@ -64,40 +64,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val rounds = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_ROUNDS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // iterative operators truncate lineage via localCheckpoint; the
-      // checkpoint blocks are reclaimed by the ContextCleaner only
-      // after the RDD object is GC'd, and the default periodic-GC
-      // interval (30 min) lets blocks from hundreds of query runs
-      // accumulate in storage memory, squeezing later queries. One
-      // minute is the standard setting for checkpoint-heavy loads.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_GC_INTERVAL", "1min"))
-      // collect_set/collect_list aggregate in ObjectHashAggregate,
-      // which falls back to SORT-based aggregation at 128 distinct
-      // keys per partition (the default) — the dedup shingle-set
-      // aggregations sit just past that cliff and pay a full sort of
-      // the exploded corpus. Measured: minhash 1.62 -> 1.36 s.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        100000)
-      // long-running-driver hygiene (the standard cluster settings):
-      // AppStatusListener retains 1000 jobs/stages + 100k tasks by
-      // default even with the UI off — a 169-query suite generates
-      // thousands of stages, and the growing status store taxes the
-      // listener bus for every later query
-      .config("spark.ui.retainedJobs", 100)
-      .config("spark.ui.retainedStages", 100)
-      .config("spark.ui.retainedTasks", 1000)
-      .config("spark.sql.ui.retainedExecutions", 8)
-      .getOrCreate()
+    val spark = Sessions.fromEnv()
     spark.sparkContext.setLogLevel("WARN")
     // session-weather yardstick, measured BEFORE any Spark work
     val calib = math.round(calibrate() * 10000) / 10000.0
@@ -136,18 +105,6 @@ object Bench {
     names.foreach { n =>
       if (warm(n, warmDir) || (warmDir != sfDir && warm(n, sfDir))) ok += n
     }
-    // SPARK_GRAFT_STORAGE_LOG=1: after each timed query, print the
-    // persistent-RDD count and total cached memory — the diagnostic
-    // for suite-level storage debris (blocks a query leaves behind
-    // slow every LATER query; the r7 1.5x suite-wide inflation hunt)
-    val storageLog = sys.env.get("SPARK_GRAFT_STORAGE_LOG").contains("1")
-    def storageLine(tag: String): Unit = if (storageLog) {
-      val rdds = spark.sparkContext.getPersistentRDDs
-      val mem = spark.sparkContext.getRDDStorageInfo
-        .map(i => i.memSize + i.diskSize).sum
-      System.err.println(
-        s"[storage] $tag rdds=${rdds.size} bytes=$mem")
-    }
     val times = scala.collection.mutable
       .Map[String, Vector[Double]]().withDefaultValue(Vector())
     val failed = scala.collection.mutable.Set[String]()
@@ -172,7 +129,6 @@ object Bench {
           if (times(n).isEmpty) ok -= n
           failed += n
       }
-      storageLine(n)
     }
     for (_ <- 1 to rounds; n <- names if ok(n) && !failed(n)) timed(n)
     def median(v: Vector[Double]): Double = {

@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** `runMain graft.Console [durable-dir]` — interactive shell over the
   * engine (the reference's `OConsoleDatabaseApp` product surface).
   * With a directory argument the database opens immediately; otherwise
   * start with `connect <dir>`. */
 object Console {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     val in = new java.io.BufferedReader(
       new java.io.InputStreamReader(System.in))

@@ -1,15 +1,15 @@
 package graft
-import org.apache.spark.scheduler.SparkListener
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Optimization-round evidence tool: writes `.explain("formatted")`
   * output for selected queries to `<outDir>/<name>_<suffix>.txt` —
   * the plan artifacts the judge checks optimization claims against
   * (guide §1: capture the plan shape before and after each change).
-  * Session config mirrors [[Bench]] so the dumped plan is the plan
+  * The session comes from [[Sessions]], so the dumped plan is the plan
   * the bench actually times.
   *
   * r15 (VERDICT #8 — the r14 dumps were post-localCheckpoint shells):
@@ -24,6 +24,12 @@ import java.nio.file.{Files, Paths}
   * executes its driver-side stages (ADVICE r14), so capture wraps the
   * BUILD as well as the sink run.
   *
+  * The same listener then times a second, warm run (codegen and plan
+  * compile paid by the first) and appends a job/stage section: wall
+  * time per job and task run/GC/CPU time, input records and shuffle
+  * records per stage — the local substitute for the Spark UI, which
+  * separates per-job scheduling floors from real compute.
+  *
   * args: <outDir> <suffix> [query-name-prefix ...]
   * env:  SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
   *       SPARK_GRAFT_CPUS (default 4)
@@ -34,47 +40,69 @@ object PlanDump {
     val outDir = args(0); val suffix = args(1)
     val prefixes = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        100000)
-      .getOrCreate()
+    val spark = Sessions.fromEnv()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => prefixes.isEmpty || prefixes.exists(n.startsWith))
-    // ordered capture of every SQL execution's formatted plan
+    // ordered capture of every SQL execution's formatted plan, plus
+    // job and stage lines for the warm run
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[
       (Long, String, String)]()
+    val jobStart = new java.util.concurrent.ConcurrentHashMap[
+      Int, (Long, String)]() // jobId -> (submit time, description)
+    val jobLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stageLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val taskRunMs = new java.util.concurrent.atomic.AtomicLong()
     val listener = new SparkListener {
-      override def onOtherEvent(
-          event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+      override def onOtherEvent(event: SparkListenerEvent): Unit =
         event match {
           case e: SparkListenerSQLExecutionStart =>
             captured.add((e.executionId, e.description,
               e.physicalPlanDescription))
           case _ => ()
         }
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobStart.put(js.jobId, (js.time, Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")))
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        Option(jobStart.get(je.jobId)).foreach { case (t0, d) =>
+          jobLines.add(f"  job ${je.jobId}%4d ${(je.time - t0) / 1000.0}%7.3f s  $d")
+        }
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val si = sc.stageInfo
+        val m = si.taskMetrics
+        taskRunMs.addAndGet(m.executorRunTime)
+        stageLines.add(f"  stage ${si.stageId}%4d run=${m.executorRunTime / 1000.0}%8.2f s " +
+          f"gc=${m.jvmGCTime / 1000.0}%6.2f cpu=${m.executorCpuTime / 1e9}%8.2f " +
+          f"tasks=${si.numTasks}%3d in=${m.inputMetrics.recordsRead}%9d " +
+          f"sr=${m.shuffleReadMetrics.recordsRead}%9d " +
+          f"sw=${m.shuffleWriteMetrics.recordsWritten}%9d  ${si.name.take(60)}")
+      }
     }
+    def build(n: String) = SparkEntry.queries(n)(spark, sfDir)
     names.foreach { n =>
       try {
         captured.clear()
         spark.sparkContext.addSparkListener(listener)
-        val df = SparkEntry.queries(n)(spark, sfDir)
+        val df = build(n)
         val finalPlan = df.queryExecution.explainString(FormattedMode)
         df.write.format("noop").mode("overwrite").save()
+        org.apache.spark.GraftBus.drain(spark.sparkContext)
+        val execs = captured.asScala.toVector.sortBy(_._1)
+        // warm run: codegen and plan compile were paid above
+        System.gc()
+        jobStart.clear(); jobLines.clear(); stageLines.clear()
+        taskRunMs.set(0L)
+        val t0 = System.nanoTime()
+        build(n).write.format("noop").mode("overwrite").save()
+        val wall = (System.nanoTime() - t0) / 1e9
         org.apache.spark.GraftBus.drain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(listener)
         val sb = new java.lang.StringBuilder
         sb.append(s"== $n: final frame (static explain) ==\n")
         sb.append(finalPlan).append('\n')
-        import scala.jdk.CollectionConverters._
-        val execs = captured.asScala.toVector.sortBy(_._1)
         // dedupe identical plan bodies (iterative rounds repeat the
         // same shape; keep the first of each + a repeat count)
         val seen = scala.collection.mutable.Map[String, Int]()
@@ -90,9 +118,15 @@ object PlanDump {
         val repeats = seen.valuesIterator.count(_ > 1)
         sb.append(s"\n== ${execs.size} executions captured, " +
           s"${seen.size} distinct plans, $repeats repeated ==\n")
+        sb.append(f"\n== warm run: wall $wall%.3f s, " +
+          s"${jobLines.size} jobs, ${stageLines.size} stages, " +
+          f"task run time ${taskRunMs.get / 1000.0}%.3f s ==\n")
+        jobLines.asScala.foreach(l => sb.append(l).append('\n'))
+        stageLines.asScala.foreach(l => sb.append(l).append('\n'))
         Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"),
           sb.toString)
-        println(s"[plandump] wrote $n (${execs.size} executions)")
+        println(s"[plandump] wrote $n (${execs.size} executions, " +
+          f"warm $wall%.3f s, ${jobLines.size} jobs)")
       } catch {
         case e: Throwable =>
           spark.sparkContext.removeSparkListener(listener)

@@ -69,7 +69,7 @@ object QueriesPipeline {
     * (CLAUDE.md seeded-constants rule). */
   /** corpus-scaled near-dup group count (r11, ADVICE): a FIXED group
     * count saturates — candidate volume grows as occupancy² while the
-    * corpus grows linearly (the ScratchR9 fixed-block caveat). Groups
+    * corpus grows linearly (the fixed-block caveat, MEASUREMENTS.md §r9). Groups
     * grow with the corpus at CONSTANT occupancy ~20 (the crawl shape
     * the 10× exponents were measured under); the 25 floor keeps
     * sf0.01 (500 docs → 500/20 = 25) bit-identical to the historical
@@ -477,7 +477,7 @@ object QueriesPipeline {
       // the blocked banding (r13): band keys carry the lang block, so
       // candidates only form within a language — the measured escape
       // for vocabulary-saturated corpora where unblocked bucket
-      // occupancy grows with n (ScratchR13: unblocked e30 = 2.09)
+      // occupancy grows with n (MEASUREMENTS.md §r13: unblocked e30 = 2.09)
       Dedup.minhashPairsBlocked(docs(s, dir), "doc_id", "text",
           blockCols = Seq("lang"), threshold = 0.8)
         .orderBy(col("a_id"), col("b_id"))

@@ -394,7 +394,7 @@ final class Catalog(spark: SparkSession) {
     * content hash over name-sorted columns (`_version` rides along, so
     * an UPDATE is always a change even when it writes equal values).
     * One commit-time probe job per conflicted class, conflict-path
-    * only — measured at 1M×21 in ScratchR13 §1. The hash is
+    * only — measured at 1M×21 in MEASUREMENTS.md §r13. The hash is
     * xxhash64(to_json(...)): codegen'd, ~half the md5 probe cost; a
     * key+`_version` fast path was measured and REJECTED — it silently
     * loses a DELETE + re-INSERT of the same key (both land at

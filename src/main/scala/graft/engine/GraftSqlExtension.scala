@@ -22,8 +22,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * of catalog-class queries; unbound, the extension is a pure
   * pass-through.
   *
-  * Activate with `.config("spark.sql.extensions",
-  * "graft.engine.GraftSqlExtension")` at session build, then
+  * Every session from [[graft.Sessions.session]] registers it; then
   * `GraftSqlExtension.bind(spark, graftSession)`.
   */
 class GraftSqlExtension extends (SparkSessionExtensions => Unit) {
@@ -49,7 +48,8 @@ object GraftSqlExtension {
     bound.synchronized { Option(bound.get(spark)).flatMap(r => Option(r.get)) }
 }
 
-final class GraftParser(spark: SparkSession, delegate: ParserInterface)
+final class GraftParser(spark: SparkSession,
+    private[graft] val delegate: ParserInterface)
     extends ParserInterface {
 
   /** With a bound session, the dialect gets first crack: if the text

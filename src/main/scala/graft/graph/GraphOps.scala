@@ -265,10 +265,6 @@ object GraphOps {
       maxRounds: Int = 50,
       localFinishThreshold: Int = 100000): DataFrame = {
     val e0 = edges.select(col("src"), col("dst")).distinct().persist()
-    // test-only switch replaying the r10 probe shape (eager checkpoint
-    // + separate isEmpty job per inner round) so ScratchR11 can A/B
-    // both shapes in ONE session (the forceBfs convention)
-    val eagerProbe = sys.props.get("graft.scc.eagerProbe").contains("1")
     // finalized (id, scc) slices accumulate here and union ONCE at
     // the end — each references a checkpointed frame, so no per-round
     // materialization of the growing result is needed
@@ -344,20 +340,15 @@ object GraphOps {
         // two directions as separate join+groupBy+join-back pipelines,
         // doubling the hop's shuffle-stage count for the same message
         // volume). Locally measured ~wash — per-JOB floors dominate,
-        // not stages (ScratchR11) — kept because every deleted shuffle
-        // stage is a cluster barrier at scale. Test-only switch replays
-        // the split shape for same-session A/B (the forceBfs
-        // convention).
-        val splitDirections =
-          sys.props.get("graft.scc.splitDirections").contains("1")
+        // not stages (MEASUREMENTS.md §r11) — kept because
+        // every deleted shuffle stage is a cluster barrier at scale.
         // NOT checkpointed: the union/projection over the checkpointed
         // eSame is shuffle-free, and a checkpoint here would pay one
         // extra materialization job per outer round — measured to cancel
         // the step fusion's win
-        val eBoth = if (splitDirections) null
-          else eSame.select(col("src"), col("dst"), lit(true).as("__fwd"))
-            .unionByName(eRev.select(col("src"), col("dst"),
-              lit(false).as("__fwd")))
+        val eBoth = eSame.select(col("src"), col("dst"), lit(true).as("__fwd"))
+          .unionByName(eRev.select(col("src"), col("dst"),
+            lit(false).as("__fwd")))
         // fused forward/backward min-label fixpoint: one loop frame
         // carries (f, b); TWO propagation steps per materialization
         // (lineage depth 2 halves the checkpoint/probe actions — round
@@ -372,22 +363,9 @@ object GraphOps {
         // — the union triples the closing aggregation's input while the
         // message-side groupBy here reduces messages BEFORE the
         // join-back touches the (vertex-sized) label frame.
-        def step(l: DataFrame): DataFrame = if (splitDirections) {
-          // r10 shape: per-direction join + groupBy + join-back
-          val fm = l.select(col("id").as("__u"), col("f").as("__fu"))
-            .join(eSame, col("__u") === eSame("src"))
-            .groupBy(col("dst").as("id")).agg(min(col("__fu")).as("__fm"))
-          val bm = l.select(col("id").as("__u"), col("b").as("__bu"))
-            .join(eRev, col("__u") === eRev("src"))
-            .groupBy(col("dst").as("id")).agg(min(col("__bu")).as("__bm"))
-          l.join(fm, Seq("id"), "left").join(bm, Seq("id"), "left")
-            .select(col("id"),
-              least(col("f"), coalesce(col("__fm"), col("f"))).as("f"),
-              least(col("b"), coalesce(col("__bm"), col("b"))).as("b"),
-              col("__of"), col("__ob"))
-        } else {
-          // r11 shape: ONE message join over the direction-tagged frame;
-          // min-ignores-nulls makes the per-direction mins one aggregate
+        // ONE message join over the direction-tagged frame;
+        // min-ignores-nulls makes the per-direction mins one aggregate
+        def step(l: DataFrame): DataFrame = {
           val msgs = l.select(col("id").as("__u"), col("f").as("__fu"),
               col("b").as("__bu"))
             .join(eBoth, col("__u") === eBoth("src"))
@@ -427,17 +405,15 @@ object GraphOps {
           // the frame, deleting the separate probe job the r10 shape
           // paid after every eager checkpoint. Wall-neutral locally
           // (the probes were take(1) reads of cached blocks — measured
-          // a wash, ScratchR11), kept because each deleted job is a
-          // scheduler round-trip at cluster scale. count(), not
-          // isEmpty: a take(1) short-circuit would leave partitions
-          // uncomputed at lineage-truncation time.
-          val stepped = step(step(pre))
-          val next = if (eagerProbe) stepped.localCheckpoint(true)
-            else stepped.localCheckpoint(false)
+          // a wash, MEASUREMENTS.md §r11), kept because each
+          // deleted job is a scheduler round-trip at cluster scale.
+          // count(), not isEmpty: a take(1) short-circuit would leave
+          // partitions uncomputed at lineage-truncation time.
+          val next = step(step(pre)).localCheckpoint(false)
           // labels only decrease — the strict-< probe is exact
           val chg = next.filter(col("f") < col("__of") ||
             col("b") < col("__ob"))
-          changed = if (eagerProbe) !chg.isEmpty else chg.count() > 0
+          changed = chg.count() > 0
           lab = next.select(col("id"), col("f"), col("b"))
         }
         // re-class by (cls, f, b). CERTIFICATION, both final same round:
@@ -713,7 +689,7 @@ object GraphOps {
     // vertex ids ride INSIDE the edge table as self-rows with a null
     // message marker (the prCore trick): every id reaches each
     // half-round's groupBy without a vertex-table join-back per
-    // half-round (A/B: 5.8 → see ScratchR6; two joins/round → one).
+    // half-round (A/B: MEASUREMENTS.md §r6; two joins/round → one).
     // Edges touching undeclared vertices are semi-filtered up front —
     // either endpoint's groupBy would otherwise mint phantom rows.
     val e = edges.select(col("src"), col("dst"))

@@ -27,7 +27,7 @@ object Dedup {
   private def spread(df: DataFrame): DataFrame = Partitioning.spread(df)
 
   /** Default pairwise-candidate budget for the saturation pre-flight
-    * (r14): ScratchR13 measured a vocabulary-saturated corpus driving
+    * (r14): MEASUREMENTS.md §r13 records a vocabulary-saturated corpus driving
     * lang-blocked ppjoin past 8 minutes at 30× with NO early signal —
     * the candidate self-join is the only unbounded stage in the dedup
     * family. Before launching it, the generators now aggregate the
@@ -249,7 +249,7 @@ object Dedup {
 
   /** [[minhashPairs]] run INSIDE caller-supplied blocking keys — the
     * banded analog of [[ppjoinPairsBlocked]], and the shipped escape
-    * for vocabulary-SATURATED corpora: ScratchR13 measured the
+    * for vocabulary-SATURATED corpora: MEASUREMENTS.md §r13 records the
     * unblocked banding going QUADRATIC past one decade on the fixed-
     * vocabulary shape (e30 = 2.09 — a fixed signature space means
     * bucket occupancy grows ∝ n, so collisions grow ∝ n²). A block
@@ -285,7 +285,7 @@ object Dedup {
     * unblocked and blocked banded modes. `maxBucket > 0` drops band
     * buckets with more members than the cap BEFORE the self-join —
     * the standard production escape for SATURATED signature spaces
-    * (ScratchR13: on a fixed-vocabulary corpus most documents share
+    * (MEASUREMENTS.md §r13: on a fixed-vocabulary corpus most documents share
     * the globally-minimal shingle hashes, so one mega-bucket holds
     * ~the whole corpus and candidates go n² even inside blocks). A
     * hot bucket is a degenerate signature, not a near-dup signal; the
@@ -300,7 +300,8 @@ object Dedup {
     val guidance =
       "Block finer (minhashPairsBlocked with more selective " +
         "blockCols), set maxBucket to drop saturation-scale buckets " +
-        "(ScratchR13: the cap held the saturated 30x point at 23 s), " +
+        "(MEASUREMENTS.md §r13: the cap held the saturated 30x point " +
+        "at 23 s), " +
         "or raise candidateBudget if the join size is intended."
     // saturation pre-flight (r14): refuse before the self-join, not
     // 8 minutes into it — judged AFTER the cap on what would actually
@@ -458,7 +459,7 @@ object Dedup {
     * candidate count approaches the true output size instead of the
     * all-pairs square.
     *
-    * MEASURED BOUNDARY (ScratchR8 10× run): rare-first only works
+    * MEASURED BOUNDARY (MEASUREMENTS.md §r8, the 10× run): rare-first only works
     * when the shingle vocabulary GROWS with the corpus (Heaps' law on
     * natural text). On a vocabulary-SATURATED corpus every prefix
     * shingle's frequency scales with n and collision pairs grow ~n²
@@ -499,7 +500,7 @@ object Dedup {
 
   /** [[ppjoinPairs]] run INSIDE caller-supplied blocking keys — the
     * exact sub-quadratic escape for vocabulary-SATURATED corpora
-    * (ScratchR8's measured 2.27 exponent): candidates only form
+    * (the 2.27 exponent measured in MEASUREMENTS.md §r8): candidates only form
     * between docs agreeing on `blockCols`, so prefix-collision growth
     * is bounded per block and the total is the SUM over blocks, not
     * the corpus square. Same blocking contract as
@@ -625,7 +626,7 @@ object Dedup {
     // bound UP past its exact real value — filters may only weaken,
     // never drop a true pair.
     // saturation pre-flight (r14): the prefix self-join below is the
-    // stage ScratchR13 measured grinding >8 min at 30× on a
+    // stage MEASUREMENTS.md §r13 records grinding >8 min at 30× on a
     // vocabulary-saturated corpus — predict its raw collision count
     // from the (already-persisted) prefix occupancy and refuse with
     // guidance instead
@@ -634,8 +635,8 @@ object Dedup {
       "The corpus is vocabulary-saturated: block finer " +
         "(ppjoinPairsBlocked with more selective blockCols), or " +
         "prefer minhashPairsBlocked with maxBucket for this shape " +
-        "(ScratchR13: measured exponent 0.42 at 30x where blocked " +
-        "ppjoin did not complete); raise candidateBudget only if the " +
+        "(MEASUREMENTS.md §r13: measured exponent 0.42 at 30x where " +
+        "blocked ppjoin did not complete); raise candidateBudget only if the " +
         "join size is intended.")
     val alpha = ceil(lit(threshold / (1 + threshold)) *
       (col("__na") + col("__nb")) - lit(1e-6))
@@ -667,7 +668,7 @@ object Dedup {
     // sets are sorted ONCE at set build (per doc): the verify then
     // runs the compiled SortedOverlap merge-scan per PAIR with a
     // threshold-bound early exit — array_intersect would build a hash
-    // set per pair, the dominant stage cost (ScratchR7 §1: verify was
+    // set per pair, the dominant stage cost (MEASUREMENTS.md §r7: verify was
     // 2.8-3.0 s of 7.5 s)
     val sets = setsFor(candIds)
     // shuffle_hash on the sets side: the pair side carries the __sha

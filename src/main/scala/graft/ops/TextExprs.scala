@@ -245,7 +245,7 @@ case class MergePair(child: Expression, left: String, right: String)
   * as ONE compiled pass per word with the ≤vocabSize-entry vocab
   * riding the expression as a reference object — replacing the
   * equivalent 16-round Bellman-Ford relaxation over the position
-  * graph (A/B in ScratchR7: the rounds were per-round
+  * graph (A/B in MEASUREMENTS.md §r7: the rounds were per-round
   * join+shuffle-bound, ~7.8 s at sf0.1; this projection is corpus-
   * parallel with NO shuffle). Tie rule replicated EXACTLY: among
   * equal-cost paths the lexicographically smallest seg wins,

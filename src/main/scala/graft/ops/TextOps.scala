@@ -341,7 +341,7 @@ object TextOps {
     * expression as a ≤vocabSize reference object): a narrow
     * projection over the distinct-word frame — corpus-parallel, NO
     * per-round shuffles (A/B vs the equivalent DataFrame relaxation
-    * in ScratchR7 §5: 7.8 → sub-second at sf0.1; corpus occurrences
+    * in MEASUREMENTS.md §r7: 7.8 → sub-second at sf0.1; corpus occurrences
     * never enter the DP either way). The (cost, then lexicographic
     * seg) argmin rule is identical on both paths and bit-identical in
     * any engine.

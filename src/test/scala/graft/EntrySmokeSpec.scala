@@ -5,15 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.engine.GraftSqlExtension")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.session(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -28,9 +20,12 @@ class EntrySmokeSpec extends AnyFunSuite {
   }
 
   test("every query executes at sf0.001") {
+    // the noop sink, as Bench and Verify run them: count() would let
+    // Catalyst prune projections and drop sorts
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      withClue(s"query $name:") { assert(n >= 0) }
+      withClue(s"query $name:") {
+        fn(spark, sf).write.format("noop").mode("overwrite").save()
+      }
     }
   }
 

@@ -295,7 +295,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(opt.contains("LeftSemi"), opt)
     // PPJoin: the verify must run the compiled sorted_overlap
     // merge-scan (early-exit; measured 4.6× over the per-pair
-    // array_intersect hash build it replaced — ScratchR8) — captured
+    // array_intersect hash build it replaced — MEASUREMENTS.md §r8) — captured
     // via listener because the result hides behind localCheckpoint
     val ppPlans = capturedPlans {
       val pp = graft.ops.Dedup.ppjoinPairs(

@@ -516,6 +516,46 @@ class OpsHygieneSpec extends AnyFunSuite {
       "ppjoinPairsBlocked must unpersist its shingle cache")
   }
 
+  test("qp_ppjoin_blocked finds exactly the 500 planted pairs on the " +
+      "saturated generated corpus") {
+    val d1 = graft.ScaleCorpus.ensure(spark, 1, blocked = true)
+    val docs = spark.read.parquet(s"$d1/documents.parquet")
+    assert(docs.count() == 5000)
+    assert(docs.select(countDistinct(col("lang"))).first().getLong(0)
+      == 20, "1x corpus must hold 20 constant-occupancy blocks")
+    // the production gate query on the generated dir: at Jaccard >= 0.8
+    // the only qualifying pairs on this shape are the planted ones
+    // (one appended token over >= 30), n/10 at 5000 docs
+    val pairs = graft.SparkEntry.queries("qp_ppjoin_blocked")(spark, d1)
+    assert(pairs.count() == 500,
+      "expected exactly the 500 planted near-dup pairs")
+    assert(pairs.filter(col("jac") < 0.8).count() == 0)
+  }
+
+  test("minhashPairs finds exactly the 100 planted pairs in the " +
+      "generated corpus; the scale-measured queries run on it") {
+    val d1 = graft.ScaleCorpus.ensure(spark, 1)
+    val docs = spark.read.parquet(s"$d1/documents.parquet")
+    assert(docs.count() == 5000)
+    val stats = docs.agg(avg(length(col("text"))),
+      countDistinct(col("lang")), countDistinct(col("source")))
+      .collect().head
+    assert(stats.getDouble(0) > 150 && stats.getDouble(0) < 600,
+      s"doc length out of the sf0.1 band: ${stats.getDouble(0)}")
+    assert(stats.getLong(1) == 5 && stats.getLong(2) == 20)
+    // every 10th doc pairs with its predecessor: exactly n/10 pairs,
+    // and LSH at 0.8 must find them all
+    val pairs = Dedup.minhashPairs(
+      docs.filter(col("doc_id") < 1000), "doc_id", "text", 0.8)
+    assert(pairs.count() == 100,
+      "expected exactly the 100 planted near-dup pairs in the 1k slice")
+    val embs = spark.read.parquet(s"$d1/embeddings.parquet")
+    assert(embs.count() == 2000 &&
+      embs.select(size(col("embedding"))).first().getInt(0) == 64)
+    graft.ScaleReproSpec.corpusOps.foreach(op =>
+      graft.SparkEntry.queries(op)(spark, d1).limit(1).collect())
+  }
+
   test("rrfFuse: consensus beats a better single-system rank; ties break on id") {
     // q=1: doc 11 is rank 2+1 across both systems, doc 10 is a lone
     // rank-1 — RRF puts the consensus doc first (1/62+1/61 > 1/61)
@@ -1582,8 +1622,9 @@ class OpsHygieneSpec extends AnyFunSuite {
       "corpus BEFORE the candidate self-join (r14)") {
     // a saturated key space in miniature: every doc identical, so all
     // band buckets / prefix tokens hold the whole corpus and the
-    // self-join output is n² — the ScratchR13 shape that ground
-    // lang-blocked ppjoin past 8 minutes at 30× with no early signal
+    // self-join output is n² — the shape that ground lang-blocked
+    // ppjoin past 8 minutes at 30× with no early signal
+    // (MEASUREMENTS.md §r13)
     val n = 120
     val sat = (0L until n.toLong)
       .map(i => (i, "the same saturated document text, repeated " * 3))

@@ -399,8 +399,8 @@ class EventStreamSpec extends AnyFunSuite {
     // rewrites or duplicates shows up as super-linear rows), bounded
     // per-batch file growth (compaction debt stays O(batch)), and
     // probe ≡ rebuild re-checked at batches 10/20/30/40/50.
-    // SCALE-gated (ScratchR* convention): measured 9.4 min wall at
-    // local[*] — run green r14 close; repeat with SPARK_GRAFT_SOAK=1.
+    // gated like the scale records (MEASUREMENTS.md §r14): measured
+    // 9.4 min wall at local[*]; repeat with SPARK_GRAFT_SOAK=1.
     assume(sys.env.get("SPARK_GRAFT_SOAK").contains("1"),
       "recorded soak — set SPARK_GRAFT_SOAK=1 to repeat (9.4 min)")
     val nBatches = 50

@@ -1,5 +1,5 @@
 #!/bin/bash
-# jar-based runner for measurement tools (Bench/ProfileQuery/PlanDump/Verify)
+# jar-based runner for measurement tools (Bench/PlanDump/Verify)
 # usage: run_class.sh <jar> <mainClass> [args...]
 # env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM as usual
 JAR="$1"; shift
