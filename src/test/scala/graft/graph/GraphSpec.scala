@@ -75,17 +75,20 @@ class GraphSpec extends AnyFunSuite {
       assert(got2 == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L),
         s"localFinishThreshold=$thr")
     }
-    // partitioning invariance on the real directed trade graph, and
-    // local-finish ≡ distributed on real data (run(13, 0) forces the
-    // all-distributed path)
-    def run(p: Int, thr: Int = 100000) = GraphOps.sccDF(
-        TradeGraph.vertices(spark, sf).repartition(p),
-        TradeGraph.directedEdges(spark, sf).repartition(p),
-        localFinishThreshold = thr)
-      .orderBy("id").collect().map(_.toSeq).toSeq
-    val base = run(1)
-    assert(base == run(13))
-    assert(base == run(13, 0),
+    // partitioning invariance on the real directed trade graph
+    val base = sccOnTradeGraph(1)
+    assert(base == sccOnTradeGraph(13))
+  }
+
+  private def sccOnTradeGraph(p: Int, thr: Int = 100000) = GraphOps.sccDF(
+      TradeGraph.vertices(spark, sf).repartition(p),
+      TradeGraph.directedEdges(spark, sf).repartition(p),
+      localFinishThreshold = thr)
+    .orderBy("id").collect().map(_.toSeq).toSeq
+
+  test("SCC: local finish equals the all-distributed refinement on the trade graph") {
+    // threshold 0 forces the all-distributed path on real data
+    assert(sccOnTradeGraph(1) == sccOnTradeGraph(13, 0),
       "sequential base case diverged from distributed refinement")
   }
 

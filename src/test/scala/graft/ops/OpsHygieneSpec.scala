@@ -516,8 +516,7 @@ class OpsHygieneSpec extends AnyFunSuite {
       "ppjoinPairsBlocked must unpersist its shingle cache")
   }
 
-  test("qp_ppjoin_blocked finds exactly the 500 planted pairs on the " +
-      "saturated generated corpus") {
+  test("qp_ppjoin_blocked finds the 500 planted pairs on the saturated corpus") {
     val d1 = graft.ScaleCorpus.ensure(spark, 1, blocked = true)
     val docs = spark.read.parquet(s"$d1/documents.parquet")
     assert(docs.count() == 5000)
@@ -532,8 +531,7 @@ class OpsHygieneSpec extends AnyFunSuite {
     assert(pairs.filter(col("jac") < 0.8).count() == 0)
   }
 
-  test("minhashPairs finds exactly the 100 planted pairs in the " +
-      "generated corpus; the scale-measured queries run on it") {
+  test("minhashPairs finds the 100 planted pairs in the generated corpus") {
     val d1 = graft.ScaleCorpus.ensure(spark, 1)
     val docs = spark.read.parquet(s"$d1/documents.parquet")
     assert(docs.count() == 5000)
