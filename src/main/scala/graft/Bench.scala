@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
   * re-pays, so it is warmed up separately). Queries are forced through
   * the `noop` sink: a `count()` would let Catalyst prune the
   * projection expressions and drop sorts, timing a lighter plan than
-  * the query actually computes. Prints ONE JSON line. */
+  * the query actually computes. Its last stdout line is [[summaryLine]]. */
 object Bench {
   private def run(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
@@ -61,6 +61,43 @@ object Bench {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+
+  private val groups = Seq("qg", "qd", "qp", "rel") // relational catch-all last
+
+  private def groupOf(n: String): String =
+    groups.init.find(g => n.startsWith(g + "_")).getOrElse("rel")
+
+  private def secs(v: Double): Double = math.round(v * 1000) / 1000.0
+
+  /** sum of the medians that ran (a failed query reads -1) */
+  private def okSum(med: Seq[(String, Double)]): Double =
+    med.collect { case (_, v) if v >= 0 => v }.sum
+
+  /** per-group subtotal seconds as a JSON object */
+  private def groupTotals(med: Seq[(String, Double)]): String = {
+    val byGroup = med.groupBy { case (n, _) => groupOf(n) }
+    groups.map(g => jstr(g) + ":" + secs(okSum(byGroup.getOrElse(g, Nil))))
+      .mkString("{", ",", "}")
+  }
+
+  /** The stdout contract: the LAST line is one JSON object of at most
+    * 2,000 characters (the driver keeps a 2,000-character tail) —
+    * total, group subtotals, scale factor, calibration probe, and per
+    * group the integer-millisecond medians of its queries in sorted-
+    * name order (-1 = failed). `med` is (query, median seconds); the
+    * full-precision record is BENCH_FULL.json. */
+  private[graft] def summaryLine(med: Seq[(String, Double)], sf: String,
+      calib: Double): String = {
+    val byGroup = med.sortBy(_._1).groupBy { case (n, _) => groupOf(n) }
+    val ms = groups.map { g =>
+      jstr(g) + byGroup.getOrElse(g, Nil)
+        .map { case (_, v) => if (v < 0) -1L else math.round(v * 1000) }
+        .mkString(":[", ",", "]")
+    }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${secs(okSum(med))},"unit":"sec",""" +
+      s""""groups":${groupTotals(med)},"sf":${jstr(sf)},"calib":$calib,""" +
+      s""""ms":$ms}"""
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -155,34 +192,12 @@ object Bench {
     val heavy = names.filter(n => ok(n) && median(times(n)) > 2.0)
     for (_ <- 1 to extraRounds; n <- heavy if !failed(n)) timed(n)
     val med = names.map(n => n -> (if (ok(n)) median(times(n)) else -1.0))
-    val total = med.collect { case (_, v) if v >= 0 => v }.sum
     val madPct = names.map(n => n -> (
       if (!ok(n)) -1L
       else {
         val m = median(times(n))
         if (m <= 0) 0L else math.round(mad(times(n)) * 100 / m)
       })).toMap
-    // Output contract (r15 — VERDICT #1a). The driver parses the LAST
-    // JSON-parseable stdout line and needs the per-query map; the
-    // short calib-only line shipped since r12 read `parsed: false` in
-    // BOTH completed driver runs (r13, r14_c8), leaving PERF_r14 with
-    // zero per-query signal. Restored order, least critical first:
-    //   1. `#V`/`#B` compact diagnostics (MAD flags, integer ms),
-    //   2. the short subtotal line (human-scannable fallback),
-    //   3. the FULL record LAST: `queries` = per-query name -> median
-    //      sec (the contract's `{"name": sec, ...}` shape, as r1-r5
-    //      printed), plus `groups` subtotals, `calibration_sec`, and
-    //      `per_query` detail (sec/MAD%/rounds). The same record is
-    //      written to BENCH_FULL.json for the judge.
-    val groups = Seq("qg", "qd", "qp") // relational catch-all goes last
-    def groupOf(n: String): String =
-      groups.find(g => n.startsWith(g + "_")).getOrElse("rel")
-    val byGroup = med.groupBy { case (n, _) => groupOf(n) }
-    val subs = (groups :+ "rel").map { g =>
-      val t = byGroup.getOrElse(g, Seq())
-        .collect { case (_, v) if v >= 0 => v }.sum
-      jstr(g) + ":" + math.round(t * 1000) / 1000.0
-    }.mkString("{", ",", "}")
     val perQuerySecs = med.map { case (n, v) =>
       s"${jstr(n)}:${if (v < 0) -1 else math.round(v * 10000) / 10000.0}"
     }.mkString("{", ",", "}")
@@ -193,9 +208,10 @@ object Bench {
           s""""sec":${if (v < 0) -1 else math.round(v * 10000) / 10000.0},""" +
           s""""mad_pct":${madPct(n)},"rounds":${times(n).size}}"""
       }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${math.round(total * 1000) / 1000.0},""" +
+      s"""{"metric":"total","value":${secs(okSum(med))},""" +
         s""""unit":"sec","queries":$perQuerySecs,"sf":${jstr(sfDir)},""" +
-        s""""calibration_sec":$calib,"groups":$subs,"per_query":$rows}"""
+        s""""calibration_sec":$calib,"groups":${groupTotals(med)},""" +
+        s""""per_query":$rows}"""
     }
     // anchor to the repo root: walk up from the launch cwd to the
     // nearest directory containing build.sbt (sbt run from a
@@ -217,40 +233,7 @@ object Bench {
         System.err.println(s"[bench] $benchOut write failed: $e") }
       println(s"#F full per-query record in $benchOut")
     }
-    def b36(p: Long): String =
-      if (p < 0) "!" else java.lang.Long.toString(math.min(p, 35L), 36)
-    // values-only positions are keyed to the FULL sorted query list;
-    // a name-prefix filter arg breaks that reconstruction, so filtered
-    // (local-timing) runs fall back to explicit name=value pairs
-    (groups :+ "rel").foreach { g =>
-      val line =
-        if (args.isEmpty)
-          byGroup.getOrElse(g, Seq()).map { case (n, _) => b36(madPct(n)) }
-            .mkString("")
-        else
-          byGroup.getOrElse(g, Seq()).map { case (n, _) =>
-            s"$n=${madPct(n)}" }.mkString(" ")
-      println(s"#V $g $line")
-    }
-    (groups :+ "rel").foreach { g =>
-      val line =
-        if (args.isEmpty)
-          byGroup.getOrElse(g, Seq()).map { case (_, v) =>
-            s"${if (v < 0) -1 else math.round(v * 1000)}"
-          }.mkString(" ")
-        else
-          byGroup.getOrElse(g, Seq()).map { case (n, v) =>
-            s"$n=${if (v < 0) -1 else math.round(v * 1000)}"
-          }.mkString(" ")
-      println(s"#B $g $line")
-    }
-    // short subtotal line second-to-last (human fallback; the r6-r14
-    // format), then the FULL per-query record as the very last line —
-    // the driver's parse takes the last JSON-parseable line, and only
-    // this one carries the per-query map it needs (VERDICT #1a)
-    val sfShort = sfDir.split('/').last
-    println(s"""{"metric":"total","value":${math.round(total * 1000) / 1000.0},"unit":"sec","groups":$subs,"sf":${jstr(sfShort)},"calib":$calib}""")
-    println(fullJson)
+    println(summaryLine(med, sfDir.split('/').last, calib))
     spark.stop()
   }
 }

@@ -56,7 +56,7 @@ object GraphOps {
     * shuffle on dst. Deterministic enough to oracle at 4 decimals. */
   def pageRankDF(vertices: DataFrame, edges: DataFrame,
       iters: Int): DataFrame =
-    prCore(vertices, edges, iters, _ => lit(1.0), _ => lit(0.15))
+    prCore(vertices, edges, lit(1L), iters, _ => lit(1.0), _ => lit(0.15))
 
   /** Personalized PageRank — relevance relative to a SOURCE SET
     * (reference-style "find related records" over the graph surface):
@@ -70,7 +70,7 @@ object GraphOps {
       sources: Seq[Long], iters: Int): DataFrame = {
     require(sources.nonEmpty, "personalized PageRank needs sources")
     val share = 1.0 / sources.size
-    prCore(vertices, edges, iters,
+    prCore(vertices, edges, lit(1L), iters,
       id => when(id.isin(sources: _*), lit(share)).otherwise(lit(0.0)),
       id => when(id.isin(sources: _*), lit(0.15 * share))
         .otherwise(lit(0.0)))
@@ -80,50 +80,26 @@ object GraphOps {
     * proportional mass split: rankₜ(v) = 0.15 + 0.85·Σ_in
     * rankₜ₋₁(u)·w(u,v)/W(u), W(u) = Σ out-weights (Xing & Ghorbani
     * 2004's weighted variant of Brin & Page; the natural rank on
-    * trade/affinity graphs where relation strength matters). Same
-    * declarative per-iteration shape as the unweighted core: one
-    * equi-join + partial-agg shuffle per round, dangling mass not
-    * redistributed, lineage truncated every 3 rounds; weights are
-    * exact longs, so the only float is the same message-sum the
+    * trade/affinity graphs where relation strength matters). Weights
+    * are exact longs, so the only float is the same message-sum the
     * unweighted operator oracles at 4 decimals. */
   def weightedPageRankDF(vertices: DataFrame, edges: DataFrame,
-      iters: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"),
-      col("w").cast("long").as("w"))
-    val outW = e.groupBy("src").agg(sum("w").as("outw"))
-    val ids = vertices.select(col("id")).persist()
-    val contrib = e.join(ids.select(col("id").as("dst")), Seq("dst"),
-        "left_semi")
-      .join(outW, "src")
-      .unionByName(ids.select(col("id").as("src"), col("id").as("dst"),
-        lit(null).cast("long").as("w"), lit(null).cast("long").as("outw")))
-      .persist()
-    var ranks = ids.withColumn("rank", lit(1.0))
-    for (i <- 1 to iters) {
-      ranks = contrib.join(ranks, contrib("src") === ranks("id"))
-        .select(col("dst"),
-          (col("rank") * col("w") / col("outw")).as("msg"))
-        .groupBy("dst").agg(sum("msg").as("msgSum"))
-        .select(col("dst").as("id"),
-          (lit(0.15) + lit(0.85) * coalesce(col("msgSum"), lit(0.0)))
-            .as("rank"))
-      if (i % 3 == 0) ranks = ranks.localCheckpoint()
-    }
-    val out = if (iters % 3 == 0) ranks else ranks.localCheckpoint()
-    contrib.unpersist()
-    ids.unpersist()
-    out
-  }
+      iters: Int): DataFrame =
+    prCore(vertices, edges, col("w").cast("long"), iters,
+      _ => lit(1.0), _ => lit(0.15))
 
-  /** shared power-iteration core: `init` seeds rank₀ per id, `reset`
-    * is the per-id teleport term added each round. */
-  private def prCore(vertices: DataFrame, edges: DataFrame, iters: Int,
-      init: Column => Column, reset: Column => Column): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // (src, dst, outdeg) and the vertex-id set are loop-invariant:
+  /** shared power-iteration core: `w` is the long edge weight (the
+    * unweighted operators pass 1, and `rank · 1 / W` is bit-identical
+    * to `rank / outdeg` in IEEE doubles), `init` seeds rank₀ per id,
+    * `reset` is the per-id teleport term added each round. */
+  private def prCore(vertices: DataFrame, edges: DataFrame, w: Column,
+      iters: Int, init: Column => Column,
+      reset: Column => Column): DataFrame = {
+    val e = edges.select(col("src"), col("dst"), w.as("w"))
+    val outW = e.groupBy("src").agg(sum("w").as("outw"))
+    // (src, dst, w, outw) and the vertex-id set are loop-invariant:
     // compute once, reuse per iter. The id set rides INSIDE the edge
-    // table as null-outdeg self-rows: their message is null (skipped
+    // table as null-weight self-rows: their message is null (skipped
     // by sum, so float terms are bit-identical to the two-join form)
     // but they force every vertex into the groupBy — one join + one
     // aggregation per iteration instead of messages-join + a second
@@ -136,14 +112,15 @@ object GraphOps {
     // pre-fold two-join formulation did
     val contrib = e.join(ids.select(col("id").as("dst")), Seq("dst"),
         "left_semi")
-      .join(outDeg, "src")
+      .join(outW, "src")
       .unionByName(ids.select(col("id").as("src"), col("id").as("dst"),
-        lit(null).cast("long").as("outdeg")))
+        lit(null).cast("long").as("w"), lit(null).cast("long").as("outw")))
       .persist()
     var ranks = ids.withColumn("rank", init(col("id")))
     for (i <- 1 to iters) {
       ranks = contrib.join(ranks, contrib("src") === ranks("id"))
-        .select(col("dst"), (col("rank") / col("outdeg")).as("msg"))
+        .select(col("dst"),
+          (col("rank") * col("w") / col("outw")).as("msg"))
         .groupBy("dst").agg(sum("msg").as("msgSum"))
         .select(col("dst").as("id"),
           (reset(col("dst")) + lit(0.85) * coalesce(col("msgSum"), lit(0.0)))
@@ -178,38 +155,82 @@ object GraphOps {
   }
 
   /** Shortest hop distances (undirected BFS) from a source-id set,
-    * bounded at `maxHops`: returns (id, dist) for every vertex reached
-    * within the bound. Frontier BFS — each round is ONE distributed
-    * join of the (shrinking) frontier against the edge list plus an
-    * anti-join against the reached set, the same shape as
-    * [[graft.engine.Traverse]]; the edge list is a persisted loop
-    * invariant, per-round frames localCheckpoint (lineage truncation,
-    * loop rule). Unreached vertices are absent (not null-distance).
-    * GraphSpec pins equality with GraphX's ShortestPaths. */
+    * bounded at `maxHops`: returns (id, dist: int) for every vertex
+    * reached within the bound. The sources that appear in the vertex
+    * table seed ONE [[bfsLevels]] group, so each vertex sits in exactly
+    * one level and its level index is its distance. Unreached vertices
+    * are absent (not null-distance). GraphSpec pins equality with
+    * GraphX's ShortestPaths. */
   def shortestHops(vertices: DataFrame, edges: DataFrame,
       sourceIds: Seq[Long], maxHops: Int): DataFrame = {
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
-      .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
-      .persist()
-    var reached = vertices.select(col("id"))
-      .filter(col("id").isin(sourceIds: _*))
-      .withColumn("dist", lit(0))
-      .localCheckpoint(true)
-    var frontier = reached
-    var d = 0
-    while (d < maxHops && !frontier.isEmpty) {
-      d += 1
-      val nxt = frontier.join(und, frontier("id") === und("a"))
-        .select(col("b").as("id")).distinct()
-        .join(reached.select(col("id").as("__r")),
-          col("id") === col("__r"), "left_anti")
-        .withColumn("dist", lit(d))
-        .localCheckpoint(true)
-      reached = reached.unionByName(nxt).localCheckpoint(true)
-      frontier = nxt
-    }
+    val und = undirected(edges)
+    val levels = bfsLevels(und, vertices.filter(col("id").isin(sourceIds: _*))
+      .select(lit(0L).as("src"), col("id").as("v"), lit(1L).as("sigma")),
+      maxHops)
     und.unpersist()
-    reached
+    levels.zipWithIndex.map { case (l, d) =>
+      l.select(col("v").as("id"), lit(d).as("dist")) }
+      .reduce(_ unionByName _)
+  }
+
+  /** Undirected adjacency (a, b): each edge in both directions,
+    * persisted as the BFS loop invariant — the caller unpersists. */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("a"), col("dst").as("b"))
+      .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+
+  /** The one bounded multi-source BFS behind [[shortestHops]],
+    * [[harmonicCentralityDF]], [[closenessCentralityDF]] and
+    * [[betweennessDF]]: from `seeds` (src, v, sigma) — level 0, one BFS
+    * per `src` group — returns the checkpointed levels 0..depth, level d
+    * holding every (src, v) at hop distance d with σ = its number of
+    * shortest paths (exact integer sums, order-free).
+    *
+    * In an undirected graph a neighbour of a level-d vertex sits at
+    * level d−1, d or d+1, so level d+1 is the neighbours of level d
+    * minus levels d−1 and d: one anti-join against two frames that are
+    * already materialised. An empty level stays empty.
+    *
+    * Scale shape: level frames are k·|level| rows (the focal-source
+    * design point), so each level is ONE streamed pass over the
+    * persisted adjacency against the BROADCAST last level + a
+    * partial-agg σ-sum + a broadcast anti-join; without the hints
+    * Catalyst SMJ-shuffles the full message stream against the tiny
+    * frames (A/B 10.4 → ~3 s at sf0.1). Each level is one eager
+    * localCheckpoint (lineage truncation). */
+  private def bfsLevels(und: DataFrame, seeds: DataFrame,
+      depth: Int): IndexedSeq[DataFrame] = {
+    val levels = scala.collection.mutable.ArrayBuffer(
+      seeds.localCheckpoint(true))
+    for (_ <- 1 to depth) {
+      val seen = levels.takeRight(2)
+        .map(_.select(col("src"), col("v").as("__v"))).reduce(_ unionByName _)
+      levels += broadcast(levels.last).join(und, col("v") === col("a"))
+        .groupBy(col("src"), col("b").as("__v"))
+        .agg(sum(col("sigma")).as("sigma"))
+        .join(broadcast(seen), Seq("src", "__v"), "left_anti")
+        .select(col("src"), col("__v").as("v"), col("sigma"))
+        .localCheckpoint(true)
+    }
+    levels.toIndexedSeq
+  }
+
+  /** (src, v, d) for each focal source's [[bfsLevels]] 1..depth, the
+    * sources themselves dropped — what harmonic and closeness close. */
+  private def focalDistances(edges: DataFrame, sourceIds: Seq[Long],
+      depth: Int): DataFrame = {
+    require(sourceIds.nonEmpty && depth >= 1, "need sources and depth")
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val und = undirected(edges)
+    val levels = bfsLevels(und,
+      sourceIds.map(s => (s, s, 1L)).toDF("src", "v", "sigma"), depth)
+    und.unpersist()
+    levels.zipWithIndex.drop(1)
+      .map { case (l, d) => l.withColumn("d", lit(d.toLong)) }
+      .reduce(_ unionByName _)
+      .filter(!col("v").isin(sourceIds: _*))
   }
 
   /** Directed strongly-connected components — the directed companion
@@ -1163,10 +1184,10 @@ object GraphOps {
   /** Bounded-radius betweenness centrality from a focal source set
     * (Brandes 2001, the two-phase algorithm; restricting to k
     * sources and radius `depth` is the standard estimator — Brandes
-    * & Pich 2007): forward BFS accumulates shortest-path counts
-    * σ(s,v) per level, the backward sweep accumulates dependencies
-    * δ(s,v) = Σ_w σ_v/σ_w·(1+δ_w) over the successor level, and
-    * betweenness(v) = Σ_s δ(s,v) for non-source v.
+    * & Pich 2007): the forward pass is [[bfsLevels]]' shortest-path
+    * counts σ(s,v) per level, the backward sweep accumulates
+    * dependencies δ(s,v) = Σ_w σ_v/σ_w·(1+δ_w) over the successor
+    * level, and betweenness(v) = Σ_s δ(s,v) for non-source v.
     *
     * Determinism: σ are exact integer path counts; δ is held in
     * integer MICRO-units with the per-(v,w) term computed as
@@ -1176,42 +1197,18 @@ object GraphOps {
     * bit-identical in any engine (longs stay < 2^60 for the depths/
     * graphs this targets). Endpoints excluded per Brandes.
     *
-    * Scale shape: the joint (src, v) frontier keys every round; per
-    * forward round ONE equi-join + partial-agg σ-sum + one anti-join
-    * vs the visited set; per backward round ONE equi-join between
-    * adjacent levels + partial-agg δ-sum (celebrity vertices
-    * pre-combine map-side, no windows); every round localCheckpoints.
+    * Scale shape: per backward round ONE equi-join between adjacent
+    * levels + partial-agg δ-sum (celebrity vertices pre-combine
+    * map-side, no windows); every round localCheckpoints.
     * Returns (id, betweenness_micro) for vertices with δ > 0. */
   def betweennessDF(edges: DataFrame, sourceIds: Seq[Long],
       depth: Int): DataFrame = {
     require(sourceIds.nonEmpty && depth >= 1, "need sources and depth")
     val spark = edges.sparkSession
     import spark.implicits._
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
-      .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    // forward: levels(d) = (src, v, sigma) at BFS distance d
-    val lvl0 = sourceIds.map(s => (s, s, 1L)).toDF("src", "v", "sigma")
-      .localCheckpoint(true)
-    val levels = scala.collection.mutable.ArrayBuffer(lvl0)
-    var visited = lvl0.select(col("src"), col("v")).localCheckpoint(true)
-    for (_ <- 1 to depth) {
-      // level/visited frames are k·|level| rows — the focal-source
-      // design point — so they broadcast and each round is ONE
-      // streamed pass over the (persisted) adjacency + partial agg;
-      // without the hints Catalyst SMJ-shuffles the full message
-      // stream against the tiny frames (A/B 10.4 → ~3 s at sf0.1)
-      val nxt = broadcast(levels.last).join(und, col("v") === col("a"))
-        .groupBy(col("src"), col("b").as("__v"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .join(broadcast(visited.select(col("src"), col("v").as("__v"))),
-          Seq("src", "__v"), "left_anti")
-        .select(col("src"), col("__v").as("v"), col("sigma"))
-        .localCheckpoint(true)
-      levels += nxt
-      visited = visited.unionByName(nxt.select(col("src"), col("v")))
-        .localCheckpoint(true)
-    }
+    val und = undirected(edges)
+    val levels = bfsLevels(und,
+      sourceIds.map(s => (s, s, 1L)).toDF("src", "v", "sigma"), depth)
     // backward: delta in micro-units, deepest level contributes 0
     var delta = levels.last.select(col("src"), col("v"),
       lit(0L).as("dmu"))
@@ -1251,40 +1248,14 @@ object GraphOps {
     * closeness variant on disconnected graphs; bounding radius and
     * sources is the same estimator trade as [[betweennessDF]]):
     * centrality(v) = Σ_s 1/d(s,v), accumulated in integer micro-units
-    * `1e6 div d` — exact, order-free, oracle-replayable.
-    *
-    * Scale shape: one joint (src, v) BFS — per round ONE equi-join
-    * streaming the persisted adjacency against the BROADCAST frontier
-    * + an anti-join vs the broadcast visited set; distances are level
-    * indexes, no per-vertex state beyond the visited set. */
+    * `1e6 div d` — exact, order-free, oracle-replayable. Distances are
+    * [[bfsLevels]] indexes; the close is one partial-agg groupBy. */
   def harmonicCentralityDF(edges: DataFrame, sourceIds: Seq[Long],
-      depth: Int): DataFrame = {
-    require(sourceIds.nonEmpty && depth >= 1, "need sources and depth")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
-      .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    var frontier = sourceIds.map(s => (s, s)).toDF("src", "v")
-      .localCheckpoint(true)
-    var visited = frontier
-    val acc = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (d <- 1 to depth) {
-      frontier = broadcast(frontier).join(und, col("v") === col("a"))
-        .select(col("src"), col("b").as("v")).distinct()
-        .join(broadcast(visited), Seq("src", "v"), "left_anti")
-        .localCheckpoint(true)
-      visited = visited.unionByName(frontier).localCheckpoint(true)
-      acc += frontier.withColumn("__hm", lit(1000000L / d))
-    }
-    val out = acc.reduce(_ unionByName _)
-      .filter(!col("v").isin(sourceIds: _*))
+      depth: Int): DataFrame =
+    focalDistances(edges, sourceIds, depth)
       .groupBy(col("v").as("id"))
-      .agg(sum(col("__hm")).as("harmonic_micro"))
+      .agg(sum(expr("1000000 div d")).as("harmonic_micro"))
       .localCheckpoint()
-    und.unpersist()
-    out
-  }
 
   /** Bounded-radius closeness centrality from a focal source set —
     * harmonic's classical companion (Bavelas 1950; Wasserman & Faust
@@ -1295,42 +1266,15 @@ object GraphOps {
     * closeness instead conditions on the reached set — reporting
     * `reached` alongside keeps the estimator honest on disconnected
     * graphs. All three outputs are exact integers: order-free,
-    * partition-invariant, oracle-replayable.
-    *
-    * Scale shape: IDENTICAL to [[harmonicCentralityDF]] — one joint
-    * (src, v) BFS, per round one equi-join streaming the persisted
-    * adjacency against the BROADCAST frontier + an anti-join vs the
-    * broadcast visited set; the close is one partial-agg groupBy. */
+    * partition-invariant, oracle-replayable. */
   def closenessCentralityDF(edges: DataFrame, sourceIds: Seq[Long],
-      depth: Int): DataFrame = {
-    require(sourceIds.nonEmpty && depth >= 1, "need sources and depth")
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
-      .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val spark = edges.sparkSession
-    import spark.implicits._
-    var frontier = sourceIds.map(s => (s, s)).toDF("src", "v")
-      .localCheckpoint(true)
-    var visited = frontier
-    val acc = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (d <- 1 to depth) {
-      frontier = broadcast(frontier).join(und, col("v") === col("a"))
-        .select(col("src"), col("b").as("v")).distinct()
-        .join(broadcast(visited), Seq("src", "v"), "left_anti")
-        .localCheckpoint(true)
-      visited = visited.unionByName(frontier).localCheckpoint(true)
-      acc += frontier.withColumn("__d", lit(d.toLong))
-    }
-    val out = acc.reduce(_ unionByName _)
-      .filter(!col("v").isin(sourceIds: _*))
+      depth: Int): DataFrame =
+    focalDistances(edges, sourceIds, depth)
       .groupBy(col("v").as("id"))
-      .agg(count(lit(1)).as("reached"), sum(col("__d")).as("dist_sum"))
+      .agg(count(lit(1)).as("reached"), sum(col("d")).as("dist_sum"))
       .withColumn("closeness_micro",
         expr("reached * 1000000L div dist_sum"))
       .localCheckpoint()
-    und.unpersist()
-    out
-  }
 
   /** Degree assortativity coefficient (Newman 2002, Phys. Rev. Lett.
     * 89): the Pearson correlation of degrees across edge endpoints —

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +9,24 @@ object SparkTestSession {
     val s = Sessions.session(4)
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Spark jobs launched while `body` runs */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    // earlier tests' events must not land on this listener
+    org.apache.spark.GraftBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.GraftBus.drain(sc)
+    } finally sc.removeSparkListener(l)
+    n.get
   }
 }
 

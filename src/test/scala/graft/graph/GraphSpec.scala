@@ -549,6 +549,63 @@ class GraphSpec extends AnyFunSuite {
     assert(a == b && a.nonEmpty)
   }
 
+  test("BFS operators: hand values on odd cycles, edges inside a level") {
+    import spark.implicits._
+    def longs(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> (1 until r.size).map(r.getLong)).toMap
+    def hops(e: org.apache.spark.sql.DataFrame, src: Seq[Long], h: Int) =
+      GraphOps.shortestHops((1L to 5L).toDF("id"), e, src, h).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toSeq.sortBy(_._1)
+    // triangle {1,2,3} with tail 3-4-5: from 1, edge 2-3 joins two
+    // level-1 vertices
+    val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
+      .toDF("src", "dst")
+    assert(hops(tri, Seq(1L), 3) ==
+      Seq(1L -> 0, 2L -> 1, 3L -> 1, 4L -> 2, 5L -> 3))
+    assert(longs(GraphOps.harmonicCentralityDF(tri, Seq(1L), 3)) == Map(
+      2L -> Seq(1000000L), 3L -> Seq(1000000L), 4L -> Seq(500000L),
+      5L -> Seq(333333L)))
+    assert(longs(GraphOps.closenessCentralityDF(tri, Seq(1L), 3)) == Map(
+      2L -> Seq(1L, 1L, 1000000L), 3L -> Seq(1L, 1L, 1000000L),
+      4L -> Seq(1L, 2L, 500000L), 5L -> Seq(1L, 3L, 333333L)))
+    // σ = 1 everywhere; only 3 lies on paths to 4 and 5
+    assert(longs(GraphOps.betweennessDF(tri, Seq(1L), 3)) == Map(
+      3L -> Seq(2000000L), 4L -> Seq(1000000L)))
+    // 5-cycle 1-2-3-4-5-1: from 1, edge 3-4 joins two level-2 vertices
+    // and level 3 is empty; from {1, 3}, edge 4-5 is inside a level of
+    // the one shortestHops group
+    val c5 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 1L))
+      .toDF("src", "dst")
+    assert(hops(c5, Seq(1L), 3) ==
+      Seq(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 2, 5L -> 1))
+    assert(hops(c5, Seq(1L, 3L), 2) ==
+      Seq(1L -> 0, 2L -> 1, 3L -> 0, 4L -> 1, 5L -> 1))
+    assert(longs(GraphOps.harmonicCentralityDF(c5, Seq(1L), 3)) == Map(
+      2L -> Seq(1000000L), 5L -> Seq(1000000L), 3L -> Seq(500000L),
+      4L -> Seq(500000L)))
+    assert(longs(GraphOps.harmonicCentralityDF(c5, Seq(1L, 3L), 2)) == Map(
+      2L -> Seq(2000000L), 4L -> Seq(1500000L), 5L -> Seq(1500000L)))
+    assert(longs(GraphOps.closenessCentralityDF(c5, Seq(1L, 3L), 2)) == Map(
+      2L -> Seq(2L, 2L, 1000000L), 4L -> Seq(2L, 3L, 666666L),
+      5L -> Seq(2L, 3L, 666666L)))
+    assert(longs(GraphOps.betweennessDF(c5, Seq(1L), 3)) == Map(
+      2L -> Seq(1000000L), 5L -> Seq(1000000L)))
+    assert(longs(GraphOps.betweennessDF(c5, Seq(1L, 3L), 2)) == Map(
+      2L -> Seq(2000000L), 4L -> Seq(1000000L), 5L -> Seq(1000000L)))
+  }
+
+  test("bounded BFS operators: Spark jobs at depth 3 from two sources") {
+    // one eager checkpoint per BFS level; pins the job count so a
+    // second materialised frame per level shows up here
+    val e = TradeGraph.edges(spark, sf)
+    e.count() // the persisted edge table materialises outside the count
+    val harmonic = SparkTestSession.jobsDuring {
+      GraphOps.harmonicCentralityDF(e, Seq(1L, 2L), depth = 3) }
+    val betweenness = SparkTestSession.jobsDuring {
+      GraphOps.betweennessDF(e, Seq(1L, 2L), depth = 3) }
+    assert((harmonic, betweenness) == ((16, 37)))
+  }
+
   test("walkSkipgrams: windowed pair multiplicities on a known trace") {
     import spark.implicits._
     // one walk 10→20→30, one walk 10→20 (a second (start, walk) key)

@@ -144,6 +144,22 @@ class OpsHygieneSpec extends AnyFunSuite {
     assert(ranks.collect().forall(r => math.abs(r.getDouble(1) - 1.0) < 0.01))
     assert(spark.sharedState.cacheManager.isEmpty,
       "pageRankDF must unpersist its loop-invariant contrib cache")
+    // the weighted core and the four bounded-BFS operators drop their
+    // contrib / adjacency caches too
+    import graft.graph.GraphOps._
+    val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "weightedPageRankDF" -> (() =>
+        weightedPageRankDF(v, e.withColumn("w", lit(2L)), iters = 4)),
+      "shortestHops" -> (() => shortestHops(v, e, Seq(1L), maxHops = 2)),
+      "harmonicCentralityDF" -> (() => harmonicCentralityDF(e, Seq(1L), 2)),
+      "closenessCentralityDF" -> (() =>
+        closenessCentralityDF(e, Seq(1L), 2)),
+      "betweennessDF" -> (() => betweennessDF(e, Seq(1L), 2)))
+    ops.foreach { case (name, run) =>
+      run().collect()
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name must unpersist its loop-invariant cache")
+    }
   }
 
   test("bm25TopK leaves no cached frames behind and tokenizes once") {

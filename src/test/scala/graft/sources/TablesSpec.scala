@@ -1,34 +1,16 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.SparkTestSession.jobsDuring
 
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
-
-  /** Spark jobs launched while `body` runs */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    // earlier tests' events must not land on this listener
-    org.apache.spark.GraftBus.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.GraftBus.drain(sc)
-    } finally sc.removeSparkListener(l)
-    n.get
-  }
 
   /** `df` as one parquet file at `file` (Spark itself writes a directory) */
   private def writeSingle(df: DataFrame, file: Path): Unit = {
