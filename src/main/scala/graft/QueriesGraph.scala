@@ -6,11 +6,12 @@ import graft.graph.{GraphOps, TradeGraph}
 
 /** Graph analytics corpus over the trade graph (customer/supplier
   * vertices, distinct trading relations as edges — see
-  * [[graft.graph.TradeGraph]]). PageRank and connected components are
+  * [[graft.graph.TradeGraph]]). Every operator is a DataFrame plan
+  * ([[graft.graph.GraphOps]]). PageRank and connected components are
   * oracle-checked against unrolled iterative SQL in DuckDB computing
-  * the same update rules; GraphX variants are invariant-tested in
-  * [[graft.graph]] specs (Pregel float-sum order is partition-
-  * dependent, so exact hashes come from the DataFrame formulation).
+  * the same update rules; `GraphSpec` cross-checks PageRank, connected
+  * components, triangles and shortest hops against GraphX in test
+  * scope only.
   */
 object QueriesGraph {
 
@@ -52,7 +53,7 @@ object QueriesGraph {
         .orderBy(col("id"))
     }),
     "qg_connected_components" -> ((s, dir) => {
-      GraphOps.connectedComponents(s, TradeGraph.vertices(s, dir),
+      GraphOps.connectedComponents(TradeGraph.vertices(s, dir),
           TradeGraph.edges(s, dir))
         .orderBy(col("id"))
     }),

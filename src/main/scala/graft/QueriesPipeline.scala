@@ -2267,14 +2267,15 @@ object QueriesPipeline {
        |   FROM bt CROSS JOIN tot)""".stripMargin
 
   /** Near-dup cluster CTEs (no leading WITH): pairs identical to
-    * qp_ngram_jaccard, then unrolled min-label propagation — the same
-    * update rule as Dedup.nearDupClusters (min of own and in-neighbor
-    * labels). The Spark side iterates to convergence; 10 unrolled
-    * rounds cover the data's diameter with margin (MATERIALIZED keeps
-    * the extra no-op rounds cheap). Yields member labels in `l10`.
+    * qp_ngram_jaccard, then unrolled min-label propagation (min of own
+    * and in-neighbor labels) — its fixpoint is Dedup.nearDupClusters'
+    * converged component labels (min member id). 10 unrolled rounds
+    * cover the data's diameter with margin (MATERIALIZED keeps the
+    * extra no-op rounds cheap). Yields member labels in `l10`.
     * COUPLING: OpsHygieneSpec "oracle horizon covers the gate corpus"
-    * pins effective propagation depth ≤ 10 on the sf0.01 pairs —
-    * raise both together if future data grows longer chains. */
+    * pins the converged Dedup.nearDupLabels equal to 10 synchronous
+    * min-label rounds on the sf0.01 pairs — raise both together if
+    * future data grows longer chains. */
   /** the qp_image_phash / qp_jpeg_phash brute-force distance CTEs:
     * decoded luma integers regenerated from doc_id (the gray-BMP /
     * block-constant-JPEG encode/decode round trips are the identity,
@@ -2370,9 +2371,11 @@ object QueriesPipeline {
 
   /** unrolled min-label propagation rounds over CTEs `u` (symmetric
     * pair edges) and `l0` (identity labels) — the SQL replay of
-    * converged [[graft.ops.Dedup.nearDupClusters]]; shared by the
-    * text and image dedup-cluster oracles. 10 rounds cover any gate
-    * pair graph's diameter (the engine runs to convergence). */
+    * [[graft.ops.Dedup.nearDupClusters]]' converged component labels;
+    * shared by the text and image dedup-cluster oracles. 10 rounds
+    * cover any gate pair graph's diameter (the engine labels
+    * components to their fixpoint; OpsHygieneSpec pins the text gate's
+    * 10-round replay equal to it). */
   private def minLabelRoundsSql(rounds: Int): String =
     (1 to rounds).map { t =>
       s"""l$t AS MATERIALIZED (SELECT id, min(lbl) AS lbl FROM (

@@ -1,7 +1,5 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -10,43 +8,29 @@ import org.apache.spark.storage.StorageLevel
   * documents with link fields — `db/graph/ODatabaseGraphTx.java:63-141`).
   * Here a graph is a pair of DataFrames:
   *   vertices(id: long, …props)   edges(src: long, dst: long, …props)
-  * Traversal-style queries stay in DataFrame joins (TRAVERSE, §2.3);
-  * whole-graph analytics bridge to GraphX (the north-star fit for
-  * iterative algorithms: Pregel keeps state co-partitioned across
-  * supersteps instead of re-shuffling joins).
+  * Traversal-style queries and whole-graph analytics alike run as
+  * DataFrame joins and group-bys (TRAVERSE, §2.3): each vertex-program
+  * superstep is one message join + one partial-combining aggregation
+  * on the general dataflow engine (the Pregelix plan shape), so there
+  * is no second graph runtime. Iterative operators truncate lineage
+  * per round with localCheckpoint.
   */
 object GraphOps {
 
-  /** DataFrame pair → GraphX graph. Properties are not carried (GraphX
-    * analytics need only the topology; join results back by id). */
-  def toGraphX(vertices: DataFrame, edges: DataFrame): Graph[Unit, Unit] = {
-    val vr: RDD[(VertexId, Unit)] =
-      vertices.select(col("id").cast("long")).rdd.map(r => (r.getLong(0), ()))
-    val er: RDD[Edge[Unit]] =
-      edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    Graph(vr, er, (), StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** GraphX connected components → (id, component) DataFrame.
-    * Component = min vertex id reachable (integer-exact → oracle-able). */
-  def connectedComponents(spark: SparkSession, vertices: DataFrame,
-      edges: DataFrame): DataFrame = {
-    import spark.implicits._
-    toGraphX(vertices, edges).connectedComponents()
-      .vertices.map { case (id, cc) => (id, cc) }
-      .toDF("id", "component")
-  }
-
-  /** GraphX static PageRank (resetProb 0.15). Float-summation order in
-    * Pregel is partition-dependent, so ranks are validated by invariant
-    * tests; the oracle-checked variant is [[pageRankDF]]. */
-  def pageRankGraphX(spark: SparkSession, vertices: DataFrame,
-      edges: DataFrame, iters: Int): DataFrame = {
-    import spark.implicits._
-    toGraphX(vertices, edges).staticPageRank(iters)
-      .vertices.map { case (id, r) => (id, r) }
-      .toDF("id", "rank")
+  /** Connected components → (id, component), component = the min
+    * member id (integer-exact → oracle-able). The components of a
+    * graph are the SCCs of its symmetrised edge set, so this is
+    * [[sccDF]] over e ∪ reverse(e) — one labelling core for directed
+    * and undirected components. Edges naming a vertex outside
+    * `vertices` are dropped, as in every operator here. Each edge
+    * row explodes into both directions, so the edge plan (often a
+    * lazy pipeline) runs once, not once per union side. */
+  def connectedComponents(vertices: DataFrame, edges: DataFrame): DataFrame = {
+    val both = edges.select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
+    sccDF(vertices, both).withColumnRenamed("scc", "component")
   }
 
   /** DataFrame power-iteration PageRank with EXACTLY the GraphX update
@@ -285,14 +269,20 @@ object GraphOps {
   def sccDF(vertices: DataFrame, edges: DataFrame,
       maxRounds: Int = 50,
       localFinishThreshold: Int = 100000): DataFrame = {
-    val e0 = edges.select(col("src"), col("dst")).distinct().persist()
+    var cls = vertices.select(col("id").cast("long").as("id"),
+        lit(0L).as("cls"))
+      .localCheckpoint(true)
+    // edges naming an undeclared vertex are dropped up front (the
+    // pageRankDF/hitsDF convention): the refinement never labels such
+    // a vertex, and the Tarjan finish indexes only declared ones
+    val e0 = edges.select(col("src"), col("dst"))
+      .join(cls.select(col("id").as("src")), Seq("src"), "left_semi")
+      .join(cls.select(col("id").as("dst")), Seq("dst"), "left_semi")
+      .distinct().persist()
     // finalized (id, scc) slices accumulate here and union ONCE at
     // the end — each references a checkpointed frame, so no per-round
     // materialization of the growing result is needed
     val done = scala.collection.mutable.ListBuffer[DataFrame]()
-    var cls = vertices.select(col("id").cast("long").as("id"),
-        lit(0L).as("cls"))
-      .localCheckpoint(true)
     var outer = 0
     // live-vertex count doubles as the emptiness probe AND the inner
     // fixpoint's derived bound (min-label propagation over a class of
@@ -310,15 +300,16 @@ object GraphOps {
         s"SCC refinement exceeded $maxRounds rounds without " +
           "converging — raise maxRounds")
       // edges with both endpoints live and in the same class (round 1
-      // has one class covering everything — skip the two joins)
-      val eSame = (if (outer == 1) e0 else e0
+      // has one class covering everything — skip the two joins, and
+      // the checkpoint: e0 is already persisted)
+      val eSame = if (outer == 1) e0 else e0
           .join(cls.select(col("id").as("src"), col("cls").as("__cs")),
             "src")
           .join(cls.select(col("id").as("dst"), col("cls").as("__cd")),
             "dst")
           .filter(col("__cs") === col("__cd"))
-          .select("src", "dst"))
-        .localCheckpoint(true)
+          .select("src", "dst")
+          .localCheckpoint(true)
       // SEQUENTIAL BASE CASE: the live remainder fits on the driver —
       // collect (bounded by the two guards) and finish with Tarjan.
       // Same-class edges are sufficient: refinement never splits an
@@ -556,17 +547,6 @@ object GraphOps {
     Array.tabulate(n)(j => (ids(j), minByRoot.get(comp(j)).longValue))
   }
 
-  /** undirected triangle count per vertex via GraphX. */
-  def triangleCounts(spark: SparkSession, vertices: DataFrame,
-      edges: DataFrame): DataFrame = {
-    import spark.implicits._
-    toGraphX(vertices, edges).partitionBy(
-        org.apache.spark.graphx.PartitionStrategy.RandomVertexCut)
-      .triangleCount()
-      .vertices.map { case (id, n) => (id, n) }
-      .toDF("id", "triangles")
-  }
-
   /** DataFrame triangle count per vertex: the ordered-edge three-way
     * self-join (a<b, b<c, a<c — each triangle materializes exactly
     * once), then per-corner membership counts. Declarative, so every
@@ -577,8 +557,8 @@ object GraphOps {
     * `edges` must be canonical (src < dst), distinct, and MATERIALIZED
     * (persist/localCheckpoint) when it is a computed plan — it is
     * consumed three times here, so a lazy projection would re-run its
-    * whole pipeline per join side. Counts are exact ints —
-    * hash-identical to [[triangleCounts]]. */
+    * whole pipeline per join side. Counts are exact ints; GraphSpec
+    * pins them equal to GraphX's triangleCount. */
   def triangleCountsDF(vertices: DataFrame, edges: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
     val tris = e.as("p1")
@@ -998,18 +978,16 @@ object GraphOps {
     * vertices, then measure what stays connected — n_kept,
     * component count, giant-component size and its micro share. The
     * capacity-planning "what if the biggest hubs disappear"
-    * answered without mutating the graph. Components come from the
-    * GraphX min-id bridge ([[connectedComponents]] — Pregel keeps the
-    * label state co-partitioned across supersteps instead of
-    * re-planning a DataFrame join per round: a 12-round DataFrame
-    * loop measured 12-20 s at sf0.1 vs ~2 s here); the oracle runs
-    * the min-label recurrence to its fixpoint within a 12-round
-    * budget, which covers the post-removal diameter (the
+    * answered without mutating the graph. Components are min-id
+    * labels from [[connectedComponents]]; the oracle runs the
+    * min-label recurrence to its fixpoint within a 12-round budget,
+    * which covers the post-removal diameter (the
     * qg_connected_components precedent — the gate would catch a
     * graph deeper than the budget).
     *
-    * Scale shape: hubs are a topK-row broadcast; components are
-    * Pregel; the close aggregates the component-size frame. */
+    * Scale shape: hubs are a topK-row broadcast; components are one
+    * [[sccDF]] over the symmetrised surviving edges; the close
+    * aggregates the component-size frame. */
   def robustnessDF(vertices: DataFrame, edges: DataFrame,
       topK: Int): DataFrame = {
     require(topK >= 0, "bad robustness params")
@@ -1023,7 +1001,7 @@ object GraphOps {
         "left_anti")
       .join(broadcast(hubs.select(col("id").as("dst"))), Seq("dst"),
         "left_anti")
-    val lbl = connectedComponents(edges.sparkSession, keep, fe)
+    val lbl = connectedComponents(keep, fe)
       .select(col("id"), col("component").as("lbl"))
     lbl.groupBy("lbl").agg(count(lit(1)).as("__sz"))
       .agg(sum(col("__sz")).as("n_kept"),

@@ -1059,30 +1059,38 @@ object Dedup {
       .select("a_id", "b_id", "dist")
   }
 
-  /** Near-duplicate CLUSTERS from a pair table: treat pairs as an
-    * undirected graph and run min-label propagation TO CONVERGENCE —
-    * the loop stops when no label changed, so a near-dup chain of any
-    * diameter collapses into one cluster (a fixed round count would
-    * silently under-merge long chains, leaving residual duplicates in
-    * the output corpus). `maxRounds` only bounds pathological inputs;
-    * labels travel one hop per round, so it binds at diameter >
-    * maxRounds. Returns (cluster, n_members): cluster id = min member
-    * id, the canonical survivor. Labels materialize per round via
-    * localCheckpoint (one row per node APPEARING IN A PAIR — a tiny
-    * frame even at 100 TB), which truncates lineage and makes the
-    * convergence count a cheap job over two materialized tables. */
-  def nearDupClusters(pairs: DataFrame, aCol: String, bCol: String,
-      maxRounds: Int = 50): DataFrame =
-    nearDupClustersCounted(pairs, aCol, bCol, maxRounds)._1
+  /** Near-duplicate CLUSTERS from a pair table: the pairs are an
+    * undirected graph and each cluster is one connected component,
+    * labelled to its fixpoint, so a near-dup chain of any diameter
+    * collapses into one cluster (a fixed round count would silently
+    * under-merge long chains, leaving residual duplicates in the
+    * output corpus). Returns (cluster, n_members): cluster id = min
+    * member id, the canonical survivor; materialized, so no cache of
+    * the pair frame outlives the call. */
+  def nearDupClusters(pairs: DataFrame, aCol: String,
+      bCol: String): DataFrame =
+    nearDupLabels(pairs, aCol, bCol)
+      .groupBy(col("cluster")).agg(count(lit(1)).as("n_members"))
+      .localCheckpoint()
 
   /** member-level cluster labels `(id, cluster)` — the same converged
-    * min-label propagation, exposed per member so callers can elect a
-    * survivor per cluster (e.g. [[graft.ops.Classifier]]-scored
-    * keep-best). */
-  def nearDupLabels(pairs: DataFrame, aCol: String, bCol: String,
-      maxRounds: Int = 50): DataFrame =
-    propagateLabels(pairs, aCol, bCol, maxRounds)._1
-      .select(col("id"), col("lbl").as("cluster"))
+    * components, exposed per member so callers can elect a survivor
+    * per cluster (e.g. [[graft.ops.Classifier]]-scored keep-best).
+    * One [[graft.graph.GraphOps.connectedComponents]] over the pair
+    * graph, with the distinct pair endpoints as its vertex set (one
+    * row per node APPEARING IN A PAIR — a tiny frame even at 100 TB).
+    * The pair frame is cached for its two consumers and released
+    * before returning; the labels reference only checkpointed data. */
+  def nearDupLabels(pairs: DataFrame, aCol: String,
+      bCol: String): DataFrame = {
+    val e = pairs.select(col(aCol).as("src"), col(bCol).as("dst")).persist()
+    val nodes = e.select(col("src").as("id"))
+      .unionByName(e.select(col("dst").as("id"))).distinct()
+    val labels = graft.graph.GraphOps.connectedComponents(nodes, e)
+      .select(col("id"), col("component").as("cluster"))
+    e.unpersist()
+    labels
+  }
 
   /** Soft dedup — down-WEIGHT duplicates instead of dropping them
     * (the DataComp-LM "SoftDedup" finding: repeated content carries
@@ -1108,58 +1116,6 @@ object Dedup {
         coalesce(col("cluster"), col("id")).as("cluster"),
         coalesce(col("__n"), lit(1L)).as("n_members"),
         expr("1000000L div coalesce(__n, 1L)").as("weight_micro"))
-  }
-
-  /** [[nearDupClusters]] plus the number of rounds that actually moved
-    * a label — the graph's effective propagation depth. Oracles that
-    * unroll a FIXED horizon (qp_dedup_clusters unrolls 10 rounds of
-    * the same update rule in DuckDB) stay equivalent to the converged
-    * Spark answer only while this depth stays within their unroll
-    * count; `DedupSpec` pins that bound on the gate corpus so the
-    * coupling can never diverge silently. */
-  def nearDupClustersCounted(pairs: DataFrame, aCol: String, bCol: String,
-      maxRounds: Int = 50): (DataFrame, Int) = {
-    val (labels, effective) = propagateLabels(pairs, aCol, bCol, maxRounds)
-    val out = labels.groupBy(col("lbl").as("cluster"))
-      .agg(count(lit(1)).as("n_members"))
-      .localCheckpoint()
-    (out, effective)
-  }
-
-  /** converged min-label propagation core: returns the checkpointed
-    * `(id, lbl)` member frame + the effective propagation depth. */
-  private def propagateLabels(pairs: DataFrame, aCol: String, bCol: String,
-      maxRounds: Int): (DataFrame, Int) = {
-    val edges = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
-    val und = edges.unionByName(
-      edges.select(col("b").as("a"), col("a").as("b"))).persist()
-    var labels = und.select(col("a").as("id")).distinct()
-      .withColumn("lbl", col("id")).localCheckpoint()
-    val lblType = labels.schema("lbl").dataType
-    var changed = 1L
-    var round = 0
-    var effective = 0
-    while (changed > 0 && round < maxRounds) {
-      round += 1
-      val prop = und.join(labels, und("a") === labels("id"))
-        .select(und("b").as("id"), col("lbl"))
-      // carry the previous label through the SAME aggregation pass
-      // (each id has exactly one labels row, so max ignores the null
-      // neighbor contributions): the convergence count below is then a
-      // filter over the one checkpointed frame instead of a second
-      // join+count job per round
-      val next = prop.withColumn("__prev", lit(null).cast(lblType))
-        .unionByName(labels.select(col("id"), col("lbl"),
-          col("lbl").as("__prev")))
-        .groupBy("id").agg(min("lbl").as("lbl"), max("__prev").as("__prev"))
-        .localCheckpoint()
-      // min-label never increases, so convergence = zero decreases
-      changed = next.filter(col("lbl") < col("__prev")).count()
-      if (changed > 0) effective += 1
-      labels = next.select(col("id"), col("lbl"))
-    }
-    und.unpersist()
-    (labels, effective)
   }
 
   /** Exact CONTAINMENT pairs within blocking keys — asymmetric

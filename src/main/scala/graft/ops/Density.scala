@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Density clustering: DBSCAN (Ester et al. 1996) over integer 2-D
@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one 9× explode on the probe side, one shuffle join on
   * cell ids, one partial-agg neighbor count, and a connected-components
-  * pass over CORE-core edges only (GraphX Pregel — state stays
-  * co-partitioned across supersteps). Per-cell occupancy bounds the
+  * pass over CORE-core edges only ([[graft.graph.GraphOps
+  * .connectedComponents]]). Per-cell occupancy bounds the
   * quadratic term: natural-density data keeps it constant as the corpus
   * grows area-wise; a fixed-area corpus that only densifies grows pair
   * counts quadratically — that is a property of the data, not the plan
@@ -35,7 +35,6 @@ object Density {
   def dbscan(points: DataFrame, idCol: String, xCol: String, yCol: String,
       eps: Long, minPts: Int): DataFrame = {
     require(eps > 0 && minPts >= 1, "eps and minPts must be positive")
-    val spark = points.sparkSession
     val p = points.select(col(idCol).cast("long").as("id"),
       col(xCol).cast("long").as("x"), col(yCol).cast("long").as("y"))
     val cell = p.withColumn("cx", expr(s"x div ${eps}L"))
@@ -62,13 +61,11 @@ object Density {
       .agg(count(lit(1)).as("n_nbr"))
     val cores = counts.filter(col("n_nbr") >= minPts).select("id").persist()
     // cluster = connected components over core-core adjacency,
-    // labelled by min core id (GraphX CC's label choice)
-    val coreEdges = pairs.filter(col("id_a") < col("id_b"))
-      .join(cores.select(col("id").as("id_a")), Seq("id_a"), "left_semi")
-      .join(cores.select(col("id").as("id_b")), Seq("id_b"), "left_semi")
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val comp = graft.graph.GraphOps.connectedComponents(spark, cores,
-      coreEdges)
+    // labelled by min core id (edges touching a non-core point name
+    // no vertex of the core graph, so the components drop them)
+    val comp = graft.graph.GraphOps.connectedComponents(cores,
+      pairs.filter(col("id_a") < col("id_b"))
+        .select(col("id_a").as("src"), col("id_b").as("dst")))
     // border points: non-core, adopt the smallest cluster among their
     // core neighbors (deterministic tie-break across adjacent clusters)
     val borderMin = pairs.filter(col("id_a") =!= col("id_b"))

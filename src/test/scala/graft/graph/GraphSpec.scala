@@ -17,7 +17,7 @@ class GraphSpec extends AnyFunSuite {
       val total = d.agg(sum("rank")).collect().head.getDouble(0)
       d.withColumn("p", col("rank") / total).select("id", "p")
     }
-    val gx = normalized(GraphOps.pageRankGraphX(spark, v, e, iters = 3))
+    val gx = normalized(GraphXRef.pageRank(spark, v, e, iters = 3))
       .withColumnRenamed("p", "gxp")
     val df = normalized(GraphOps.pageRankDF(v, e, iters = 3))
     val maxdiff = gx.join(df, "id")
@@ -29,7 +29,21 @@ class GraphSpec extends AnyFunSuite {
   test("connected components: isolated customers are their own component") {
     val v = TradeGraph.vertices(spark, sf)
     val e = TradeGraph.edges(spark, sf)
-    val cc = GraphOps.connectedComponents(spark, v, e)
+    val cc = GraphOps.connectedComponents(v, e)
+    def labels(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the symmetrised-SCC labelling equals GraphX's Pregel fixpoint
+    assert(labels(cc) == labels(GraphXRef.connectedComponents(spark, v, e)))
+    assert(cc.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("id" -> "bigint", "component" -> "bigint"))
+    // hand graph: 1→2←3 (no directed path 1 to 3) and the 2-cycle
+    // 5↔6 are two components, edge direction ignored; 4 is isolated
+    import spark.implicits._
+    val hv = (1L to 6L).toDF("id")
+    val he = Seq((1L, 2L), (3L, 2L), (5L, 6L), (6L, 5L)).toDF("src", "dst")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
+      5L -> 5L, 6L -> 5L)
+    assert(labels(GraphOps.connectedComponents(hv, he)) == want)
     val withEdges = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
     val isolated = v.join(withEdges, Seq("id"), "left_anti")
@@ -75,6 +89,16 @@ class GraphSpec extends AnyFunSuite {
       assert(got2 == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L),
         s"localFinishThreshold=$thr")
     }
+    // edges naming an undeclared vertex (99) are dropped on both
+    // paths: 2↔99 is no cycle through declared vertices
+    val e3 = Seq((2L, 99L), (99L, 2L), (3L, 99L)).toDF("src", "dst")
+    for (thr <- Seq(100000, 0)) {
+      val got3 = GraphOps.sccDF(v2.filter("id <= 3"), e3,
+          localFinishThreshold = thr)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got3 == Map(1L -> 1L, 2L -> 2L, 3L -> 3L),
+        s"localFinishThreshold=$thr")
+    }
     // partitioning invariance on the real directed trade graph
     val base = sccOnTradeGraph(1)
     assert(base == sccOnTradeGraph(13))
@@ -115,7 +139,7 @@ class GraphSpec extends AnyFunSuite {
     // triangle 1-2-3 plus a dangling edge 3-4
     val v = Seq(1L, 2L, 3L, 4L).toDF("id")
     val e = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
-    val t = GraphOps.triangleCounts(spark, v, e)
+    val t = GraphXRef.triangleCounts(spark, v, e)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(t == Map(1L -> 1, 2L -> 1, 3L -> 1, 4L -> 0))
   }
@@ -128,7 +152,7 @@ class GraphSpec extends AnyFunSuite {
       (5L, 6L), (6L, 7L), (7L, 8L), (5L, 8L), (5L, 7L))
     val v = (1L to 8L).toDF("id")
     val e = edges.toDF("src", "dst")
-    val gx = GraphOps.triangleCounts(spark, v, e)
+    val gx = GraphXRef.triangleCounts(spark, v, e)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val df = GraphOps.triangleCountsDF(v, e)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -168,7 +192,7 @@ class GraphSpec extends AnyFunSuite {
     val und = e.unionByName(
       e.select(col("dst").as("src"), col("src").as("dst")))
     val gx = org.apache.spark.graphx.lib.ShortestPaths
-      .run(GraphOps.toGraphX(v, und), Seq(1L))
+      .run(GraphXRef.toGraphX(v, und), Seq(1L))
       .vertices
       .flatMap { case (id, spmap) => spmap.get(1L).map(d => (id, d)) }
       .toDF("id", "dist")

@@ -120,7 +120,7 @@ class AssociationDensitySpec extends AnyFunSuite {
   test("gate-shape dbscan oracle unroll reaches the CC fixpoint") {
     // the qp_dbscan oracle unrolls min-label propagation 16 rounds;
     // this pins the invariant it relies on at the gate scale: on the
-    // sf0.01-shaped point set, GraphX CC (exact fixpoint) labels =
+    // sf0.01-shaped point set, exact-fixpoint CC labels =
     // a 16-round brute-force label prop
     val n = 500
     val ids = spark.range(n).select(col("id"))

@@ -94,32 +94,64 @@ class OpsHygieneSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     // a chain 1-2-3-...-10 has diameter 9: a fixed 6-round horizon
     // silently under-merges it into several "clusters"; convergence
-    // detection must collapse it to ONE with the min id as survivor
-    val chain = (1L to 9L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val out = Dedup.nearDupClusters(chain, "a_id", "b_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(out.toSeq == Seq((1L, 10L)))
+    // detection must collapse it to ONE with the min id as survivor.
+    // The 120-node chain is deeper than any fixed round cap a label
+    // loop might carry (a 50-round cap leaves 70 clusters)
+    for (n <- Seq(10L, 120L)) {
+      val chain = (1L until n).map(i => (i, i + 1)).toDF("a_id", "b_id")
+      val out = Dedup.nearDupClusters(chain, "a_id", "b_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(out.toSeq == Seq((1L, n)), s"chain of $n")
+    }
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("qp_dedup_clusters oracle horizon covers the gate corpus") {
     // the DuckDB oracle unrolls EXACTLY 10 label-propagation rounds
-    // (QueriesPipeline qp_dedup_clusters) while the Spark side runs to
-    // convergence — they agree only while the gate corpus's effective
-    // propagation depth stays ≤ 10. Pin that bound on the same pairs
-    // the oracle builds (sf0.01, the corpus the driver gates on) so a
-    // longer near-dup chain in future data fails HERE, not as a silent
-    // oracle hash mismatch.
+    // (QueriesPipeline qp_dedup_clusters) while the Spark side labels
+    // components to their fixpoint — they agree only while the gate
+    // corpus's propagation depth stays ≤ 10. Replay the oracle's 10
+    // synchronous min-label rounds on the driver over the same pairs
+    // the oracle builds (sf0.01, the corpus the driver gates on): with
+    // min-labels, the 10-round labels equal the fixpoint exactly when
+    // no label would still move in round 11, so a longer near-dup
+    // chain in future data fails HERE, not as a silent oracle hash
+    // mismatch.
     val d = Tables.load(spark, "/root/testdata/sf0.01", "documents")
       .withColumn("__lb", floor(col("n_chars") / 20).cast("int"))
     val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text",
-      blockCols = Seq("lang", "__lb"), threshold = 0.8)
-    val (_, rounds) =
-      Dedup.nearDupClustersCounted(pairs, "a_id", "b_id")
-    assert(rounds <= 10,
-      s"effective propagation depth $rounds exceeds the oracle's " +
-        "10-round unroll: raise the unroll in QueriesPipeline " +
-        "qp_dedup_clusters alongside this bound")
+      blockCols = Seq("lang", "__lb"), threshold = 0.8).localCheckpoint()
+    val edges = pairs.select("a_id", "b_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(edges.nonEmpty)
+    val adj = (edges ++ edges.map(_.swap))
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    var lbl = adj.keys.map(i => i -> i).toMap
+    // SYNCHRONOUS rounds — the oracle's exact update rule
+    for (_ <- 1 to 10)
+      lbl = lbl.map { case (id, l) => id -> math.min(l, adj(id).map(lbl).min) }
+    val converged = Dedup.nearDupLabels(pairs, "a_id", "b_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(converged == lbl,
+      "the converged labels differ from the oracle's 10-round unroll: " +
+        "raise the unroll in QueriesPipeline qp_dedup_clusters " +
+        "alongside this test")
+  }
+
+  test("src/main references no GraphX") {
+    // every graph operator is a DataFrame plan; GraphX is a test-scope
+    // oracle only (graft.graph.GraphXRef)
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"missing $root")
+    val st = Files.walk(root)
+    val files = try st.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .toList finally st.close()
+    assert(files.size > 50, s"only ${files.size} sources under $root")
+    val hits = files.filter(
+      Files.readString(_).contains("org.apache.spark.graphx"))
+    assert(hits.isEmpty, s"GraphX referenced from src/main: $hits")
   }
 
   test("nearDupClusters leaves no cached frames behind") {
