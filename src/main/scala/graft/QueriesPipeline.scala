@@ -3308,13 +3308,13 @@ object QueriesPipeline {
          | FROM hashed ORDER BY doc_id""".stripMargin,
     "qp_minhash_pairs" -> minhashPairsOracle,
     "qp_minhash_blocked" -> {
-      // the block prefix on the band key only restricts candidates to
+      // the block key on the band bucket only restricts candidates to
       // same-block pairs; within a block, collisions equal the
-      // unprefixed ones — so the replay is the qp_minhash_pairs CTE
+      // unblocked ones — so the replay is the qp_minhash_pairs CTE
       // chain with a lang-agreement join on the documents table.
-      // IS NOT DISTINCT FROM (r14, ADVICE): the engine's block key is
-      // struct(lang).cast("string"), which groups NULL langs into ONE
-      // block — a plain equality join would silently drop them
+      // IS NOT DISTINCT FROM: the engine's block key is struct(lang),
+      // whose equality groups NULL langs into ONE block — a plain
+      // equality join would silently drop them
       val bandRows = (0 until 4).map { b =>
         val ks = (b * 4 until b * 4 + 4).map(i => s"s$i").mkString(", ")
         s"SELECT doc_id, sh, concat_ws('_', $b, $ks) AS band FROM sigs"

@@ -265,12 +265,16 @@ object GraphOps {
     * threshold edges — the repo's bounded-collect convention), not a
     * corpus materialization; pass `localFinishThreshold = 0` to force
     * the all-distributed path (specs pin both paths result-identical).
-    * Returns (id, scc), scc = min member id. */
+    * Returns (id, scc), scc = min member id, both non-nullable on
+    * either path. */
   def sccDF(vertices: DataFrame, edges: DataFrame,
       maxRounds: Int = 50,
       localFinishThreshold: Int = 100000): DataFrame = {
+    // a null id names no vertex: dropped, which also types `id`
+    // non-nullable on both finishing paths
     var cls = vertices.select(col("id").cast("long").as("id"),
         lit(0L).as("cls"))
+      .filter(col("id").isNotNull)
       .localCheckpoint(true)
     // edges naming an undeclared vertex are dropped up front (the
     // pageRankDF/hitsDF convention): the refinement never labels such
@@ -453,8 +457,11 @@ object GraphOps {
           .select(col("id"), col("__new"), col("f"), col("b"), col("__gn"))
           .localCheckpoint(false)
         val isFinal = col("f") === col("b") || col("__gn") === 1
+        // coalesce: a group's min is never null, but Catalyst types
+        // `min` nullable — this keeps the refinement's schema equal to
+        // the Tarjan finish's non-nullable (id, scc)
         done += next.filter(isFinal)
-          .select(col("id"), col("__new").as("scc"))
+          .select(col("id"), coalesce(col("__new"), col("id")).as("scc"))
         cls = next.filter(!isFinal)
           .select(col("id"), col("__new").as("cls"))
         nLive = cls.count()
@@ -985,22 +992,21 @@ object GraphOps {
     * qg_connected_components precedent — the gate would catch a
     * graph deeper than the budget).
     *
-    * Scale shape: hubs are a topK-row broadcast; components are one
-    * [[sccDF]] over the symmetrised surviving edges; the close
-    * aggregates the component-size frame. */
+    * Scale shape: hubs are a collected topK-id list (literal
+    * filters); components are one [[sccDF]] over the symmetrised
+    * surviving edges; the close aggregates the component-size frame. */
   def robustnessDF(vertices: DataFrame, edges: DataFrame,
       topK: Int): DataFrame = {
     require(topK >= 0, "bad robustness params")
+    // the topK hub ids are collected ONCE (a control-plane list of
+    // topK longs): as a lazy sort+limit frame, each of its three uses
+    // re-ran the degree aggregation
     val hubs = degrees(vertices, edges)
       .orderBy(col("total").desc, col("id")).limit(topK)
-      .select(col("id"))
-    val keep = vertices.select(col("id"))
-      .join(broadcast(hubs), Seq("id"), "left_anti")
+      .select(col("id").cast("long")).collect().map(_.getLong(0)).toSeq
+    val keep = vertices.select(col("id")).filter(!col("id").isin(hubs: _*))
     val fe = edges.select(col("src"), col("dst"))
-      .join(broadcast(hubs.select(col("id").as("src"))), Seq("src"),
-        "left_anti")
-      .join(broadcast(hubs.select(col("id").as("dst"))), Seq("dst"),
-        "left_anti")
+      .filter(!col("src").isin(hubs: _*) && !col("dst").isin(hubs: _*))
     val lbl = connectedComponents(keep, fe)
       .select(col("id"), col("component").as("lbl"))
     lbl.groupBy("lbl").agg(count(lit(1)).as("__sz"))

@@ -21,6 +21,14 @@ import TextOps._
   *    (long arrays, not strings), restricted by blocking keys —
   *    the quadratic fallback you run per-block, never globally;
   *  - embedding cosine near-dup lives in [[Similarity]].
+  *
+  * The Jaccard pair family shares one of each decision: one corpus
+  * explode ([[shingledCorpus]]) and one set build ([[shingleSets]]),
+  * one block key ([[blockKey]] — null block values form one block in
+  * every blocked generator), one exact verify ([[verifyJaccard]]) for
+  * the candidate generators (minhash, index probe, ppjoin), and one
+  * blocked self-join ([[blockedSelfJoin]]) for the exact-quadratic
+  * ones (n-gram, containment, simhash).
   */
 object Dedup {
 
@@ -30,20 +38,15 @@ object Dedup {
     * (r14): MEASUREMENTS.md §r13 records a vocabulary-saturated corpus driving
     * lang-blocked ppjoin past 8 minutes at 30× with NO early signal —
     * the candidate self-join is the only unbounded stage in the dedup
-    * family. Before launching it, the generators now aggregate the
-    * bucket/prefix occupancy they already computed into a predicted
-    * candidate count (Σ n·(n−1)/2 — the join's exact pre-distinct
-    * output size) and refuse with guidance when it exceeds the
-    * budget. 2e9 is ~100× the sf0.1 gate workloads (28.9M raw ppjoin
-    * collisions) and well past any healthy corpus at any scale —
-    * blocked occupancy is corpus-size-free; only saturation reaches
-    * it. Pass `candidateBudget <= 0` to disable. Deployments can
-    * retune without a rebuild via `GRAFT_CANDIDATE_BUDGET` (also the
-    * optimization-round A/B switch for measuring the guard's cost —
-    * 0 disables, unset keeps the default). */
-  val DefaultCandidateBudget: Long =
-    sys.env.get("GRAFT_CANDIDATE_BUDGET").map(_.toLong)
-      .getOrElse(2000000000L)
+    * family. Before launching it, the generators aggregate the
+    * bucket/prefix/block occupancy they already computed into a
+    * predicted candidate count (Σ n·(n−1)/2 — the join's exact
+    * pre-distinct output size) and refuse with guidance when it
+    * exceeds the budget. 2e9 is ~100× the sf0.1 gate workloads (28.9M
+    * raw ppjoin collisions) and well past any healthy corpus at any
+    * scale — blocked occupancy is corpus-size-free; only saturation
+    * reaches it. Pass `candidateBudget <= 0` to disable. */
+  val DefaultCandidateBudget: Long = 2000000000L
 
   /** estimate-only occupancy pass shared by the minhash and ppjoin
     * generators: ONE aggregation over the small (id, key) frame the
@@ -109,28 +112,75 @@ object Dedup {
   private def jacFromInter(inter: Column, a: Column, b: Column): Column =
     round(inter.cast("double") / (size(a) + size(b) - inter), 6)
 
+  /** The one block-key encoding of the blocked family: the block
+    * columns as ONE struct column `__blk`. Struct equality treats null
+    * fields as equal, so docs with null block values form one block of
+    * their own in every blocked generator (the minhash oracles replay
+    * this with IS NOT DISTINCT FROM), and the pre-flight counts that
+    * block exactly as the self-join forms it. No block columns, no key. */
+  private def blockKey(blockCols: Seq[String]): Seq[Column] =
+    if (blockCols.isEmpty) Nil
+    else Seq(struct(blockCols.map(col): _*).as("__blk"))
+
+  /** the block key columns a frame carries: `__blk` or none. */
+  private def blkKeys(df: DataFrame): Seq[String] =
+    df.columns.toSeq.filter(_ == "__blk")
+
+  /** ONE shingle-exploded corpus pass `(__id, [__blk], __h)`, `__h` =
+    * hash60 of each character shingle (md5 runs once per shingle,
+    * inside whole-stage codegen — not an interpreted array lambda).
+    * Spread is applied here. Every signature and set builder starts
+    * from this frame. */
+  private def shingledCorpus(df: DataFrame, idCol: String,
+      textCol: String, shingleN: Int,
+      blockCols: Seq[String] = Nil): DataFrame =
+    spread(df).select(col(idCol).as("__id") +: blockKey(blockCols) :+
+        explode(charShingles(col(textCol), shingleN)).as("__s"): _*)
+      .withColumn("__h", hash60(col("__s"))).drop("__s")
+
+  /** the k minhash min-aggregates over `__h` (codegen'd, map-side
+    * partial) — shared by [[minhashSigs]] and [[sigSets]]. */
+  private def minhashAggs: Seq[Column] =
+    minhashCoeffs.zipWithIndex.map { case ((a, b), i) =>
+      min((lit(a) * (col("__h") % MinhashP) + lit(b)) % MinhashP).as(s"s$i")
+    }
+
+  /** a doc's distinct shingle hashes, sorted ascending AT SET BUILD
+    * (once per doc) so every verify site — including the on-disk index
+    * format [[writeDedupIndex]] persists — runs the compiled
+    * [[SortedOverlap]] merge-scan per pair instead of an
+    * array_intersect hash build. */
+  private def shingleSet: Column = sort_array(collect_set(col("__h"))).as("__sh")
+
+  /** The one set build `(__id, [__blk], <aggs>, __sh)`: ONE corpus
+    * explode + ONE partial-combining aggregation. `aggs` rides the same
+    * aggregation ([[minhashAggs]] for the banded generators), so the
+    * signature and the verify set never cost two corpus passes. Not
+    * persisted here — callers persist for the scope they need. Docs
+    * with no shingles (text shorter than the shingle width) never
+    * enter it: they can never verify, and in the banded generators
+    * their degenerate band keys would send candidate generation
+    * quadratic (~10¹² pairs at 100 TB). */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, blockCols: Seq[String],
+      aggs: Seq[Column] = Nil): DataFrame = {
+    val shingled = shingledCorpus(df, idCol, textCol, shingleN, blockCols)
+    val all = aggs :+ shingleSet
+    shingled.groupBy(col("__id") +: blkKeys(shingled).map(col): _*)
+      .agg(all.head, all.tail: _*)
+  }
+
   /** minhash signature table (idCol, s0..s{k-1}) via shingle explode +
     * k codegen'd min-aggregates — one shuffle, map-side partials. */
   def minhashSigs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 4): DataFrame = {
-    val exploded = spread(df).select(col(idCol),
-        explode(charShingles(col(textCol), shingleN)).as("__s"))
-      .withColumn("__h", hashMod(col("__s"), MinhashP))
-    val aggs = minhashCoeffs.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("__h") + lit(b)) % MinhashP).as(s"s$i")
-    }
-    val sigs = exploded.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+    val sigs = shingledCorpus(df, idCol, textCol, shingleN)
+      .groupBy(col("__id").as(idCol))
+      .agg(minhashAggs.head, minhashAggs.tail: _*)
     // left join keeps shingle-less docs (null signature) — explode
     // would otherwise silently drop them from the output
     df.select(col(idCol)).distinct().join(sigs, Seq(idCol), "left")
   }
-
-  /** per-document minhash signature columns s0..s{k-1} appended to the
-    * input rows (kept for API/oracle surface; the pair path uses
-    * [[minhashSigs]] directly). */
-  def withMinhash(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 4): DataFrame =
-    df.join(minhashSigs(df, idCol, textCol, shingleN), idCol)
 
   /** (band, id) bucket rows for LSH candidate generation. Exposed for
     * the hot-bucket spec: null-signature docs (text shorter than the
@@ -145,95 +195,59 @@ object Dedup {
     bandBucketsFromSigs(minhashSigs(df, idCol, textCol, shingleN)
       .withColumnRenamed(idCol, "__id"), bands)
 
-  /** band-key explode over a signature table (__id, s0..s{k-1}, ...) —
-    * the shared core of [[bandBuckets]] and [[minhashPairs]]. Band key
-    * = band index + concatenated sig slice; explode to (bandKey, id):
-    * candidate generation shuffles ONLY small keys. */
-  private def bandBucketsFromSigs(sigs: DataFrame, bands: Int,
-      blkPrefix: Option[Column] = None): DataFrame = {
+  /** band-key explode over a signature table (__id, [__blk],
+    * s0..s{k-1}, ...) — the shared core of [[bandBuckets]] and the
+    * banded generators. Band key = band index + concatenated sig
+    * slice; explode to (__id, [__blk], __band): candidate generation
+    * shuffles ONLY small keys. A bucket is a `(__blk, __band)` key when
+    * blocked, which confines every candidate pair to one block. */
+  private def bandBucketsFromSigs(sigs: DataFrame, bands: Int): DataFrame = {
     val rowsPerBand = MinhashK / bands
     val bandKeys = (0 until bands).map { b =>
       val ks = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"s$i"))
-      // a block prefix (the blocked variant) confines every bucket —
-      // and therefore every candidate pair — to one block
-      concat_ws("_", blkPrefix.toSeq ++ (lit(b) +: ks): _*)
+      concat_ws("_", lit(b) +: ks: _*)
     }
     sigs.filter(col("s0").isNotNull)
-      .select(col("__id"), explode(array(bandKeys: _*)).as("__band"))
+      .select(col("__id") +: blkKeys(sigs).map(col) :+
+        explode(array(bandKeys: _*)).as("__band"): _*)
   }
+
+  /** The per-doc signature + sorted-shingle-set table
+    * `(__id, s0..s{k-1}, __sh)` — the one set build with the minhash
+    * aggregates. Exposed so a caller composing the exact ppjoin and the
+    * banded MinHash generator over the SAME corpus (the lsh-recall eval
+    * shape) can build this once, persist it, and feed
+    * [[minhashPairsOnSigSets]] AND [[ppjoinPairsOnSigSets]]: separately
+    * the two generators re-scan, re-shingle and re-aggregate the
+    * corpus — and ppjoin's distinct (id, hash) base is exactly the
+    * EXPLODE of `__sh`, so sharing also deletes a corpus-sized distinct
+    * exchange. Caller persists (it feeds ≥ 4 join sides). */
+  def sigSets(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int = 4): DataFrame =
+    shingleSets(df, idCol, textCol, shingleN, Nil, minhashAggs)
 
   /** MinHash-LSH near-duplicate pairs: candidates from band-bucket
     * collisions, verified by exact shingle Jaccard ≥ `threshold`.
     * Returns (a_id, b_id, jac).
     *
     * ONE exploded corpus pass feeds BOTH the signature min-aggregates
-    * and the verify shingle sets — computed separately they each scan
-    * and shingle the whole corpus (two scans, two shuffles); fused
-    * they cost one scan and one partial-combining groupBy. The fused
-    * table feeds four join sides (two bucket, two verify), so it is
-    * persisted for the duration of the call: Spark's exchange reuse
-    * does NOT cover upstream aggregations (measured: the lazy form
-    * recomputes them per consuming side, 4× slower end-to-end — a
-    * full extra corpus pass per probe side at scale). The threshold-
-    * filtered pair output is tiny; it is materialized via
+    * and the verify shingle sets ([[sigSets]]) — computed separately
+    * they each scan and shingle the whole corpus (two scans, two
+    * shuffles); fused they cost one scan and one partial-combining
+    * groupBy. The fused table feeds four join sides (two bucket, two
+    * verify), so it is persisted for the duration of the call: Spark's
+    * exchange reuse does NOT cover upstream aggregations (measured: the
+    * lazy form recomputes them per consuming side, 4× slower
+    * end-to-end — a full extra corpus pass per probe side at scale).
+    * The threshold-filtered pair output is tiny; it is materialized via
     * localCheckpoint so the cache can be released before returning —
-    * scoped, nothing accumulates across calls. Docs with no shingles
-    * (text shorter than the shingle width) never enter the fused
-    * aggregation, which matches [[bandBuckets]]' null-signature
-    * exclusion: they can never verify, and their degenerate band keys
-    * would send candidate generation quadratic (~10¹² pairs at
-    * 100 TB). */
-  /** ONE shingle-exploded corpus pass `(__id, __s)` — the frame the
-    * signature/set builders start from. Spread is applied here. */
-  private def shingledCorpus(df: DataFrame, idCol: String,
-      textCol: String, shingleN: Int = 4): DataFrame =
-    spread(df).select(col(idCol).as("__id"),
-      explode(charShingles(col(textCol), shingleN)).as("__s"))
-
-  /** The per-doc signature + sorted-shingle-set table
-    * `(__id, s0..s{k-1}, __sh)` — ONE corpus explode + ONE
-    * partial-combining aggregation. Exposed so a caller composing the
-    * exact ppjoin and the banded MinHash generator over the SAME
-    * corpus (the lsh-recall eval shape) can build this once, persist
-    * it, and feed [[minhashPairsOnSigSets]] AND
-    * [[ppjoinPairsOnSigSets]]: separately the two generators re-scan,
-    * re-shingle and re-aggregate the corpus — and ppjoin's distinct
-    * (id, hash) base is exactly the EXPLODE of `__sh`, so sharing
-    * also deletes a corpus-sized distinct exchange. Caller persists
-    * (it feeds ≥ 4 join sides). */
-  def sigSets(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 4): DataFrame =
-    sigSetsBase(df, idCol, textCol, shingleN)
-
-  /** fused signature + shingle-set base: ONE exploded corpus pass
-    * feeding both the minhash min-aggregates and the exact-verify
-    * shingle sets (see [[minhashPairs]] for why fused). Not persisted
-    * here — callers persist for the scope they need. `__sh` is sorted
-    * ascending AT SET BUILD (once per doc) so every verify site —
-    * including the on-disk index format [[writeDedupIndex]] persists —
-    * can run the compiled [[SortedOverlap]] merge-scan per pair
-    * instead of an array_intersect hash build. */
-  private def sigSetsBase(df: DataFrame, idCol: String,
-      textCol: String, shingleN: Int): DataFrame =
-    sigSetsFromShingles(shingledCorpus(df, idCol, textCol, shingleN))
-
-  private def sigSetsFromShingles(shingled: DataFrame): DataFrame = {
-    val exploded = shingled
-      .withColumn("__h", hashMod(col("__s"), MinhashP))
-    val aggs = minhashCoeffs.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("__h") + lit(b)) % MinhashP).as(s"s$i")
-    } :+ sort_array(collect_set(hash60(col("__s")))).as("__sh")
-    exploded.groupBy(col("__id")).agg(aggs.head, aggs.tail: _*)
-  }
-
+    * scoped, nothing accumulates across calls. */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 4, bands: Int = 4,
       candidateBudget: Long = DefaultCandidateBudget): DataFrame = {
-    val base = sigSetsBase(df, idCol, textCol, shingleN).persist()
-    val pairs = minhashPairsOnSigSets(base, threshold, bands,
-      candidateBudget)
-    base.unpersist()
-    pairs
+    val base = sigSets(df, idCol, textCol, shingleN).persist()
+    try minhashPairsOnSigSets(base, threshold, bands, candidateBudget)
+    finally base.unpersist()
   }
 
   /** [[minhashPairs]] over a pre-built (caller-persisted — it feeds
@@ -252,16 +266,14 @@ object Dedup {
     * for vocabulary-SATURATED corpora: MEASUREMENTS.md §r13 records the
     * unblocked banding going QUADRATIC past one decade on the fixed-
     * vocabulary shape (e30 = 2.09 — a fixed signature space means
-    * bucket occupancy grows ∝ n, so collisions grow ∝ n²). A block
-    * prefix on every band key bounds occupancy per block; the total is
+    * bucket occupancy grows ∝ n, so collisions grow ∝ n²). The block
+    * key on every band bucket bounds occupancy per block; the total is
     * the sum over blocks, not the corpus square. Same caller contract
     * as the rest of the blocked family: near-dups never split across
     * blocks (lang / source / length-band are the deployment keys);
     * WITHIN a block the candidate generation and the exact-Jaccard
     * verify are the unchanged [[minhashPairs]] machinery. NULL block
-    * values form ONE block of their own (the key is
-    * struct(blockCols).cast("string"), so nulls compare equal — r14:
-    * the oracles replay this with IS NOT DISTINCT FROM). */
+    * values form ONE block of their own ([[blockKey]]). */
   def minhashPairsBlocked(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], threshold: Double,
       shingleN: Int = 4, bands: Int = 4, maxBucket: Int = 0,
@@ -270,15 +282,11 @@ object Dedup {
       "blockCols must be non-empty — use minhashPairs for the unblocked join")
     require(bands > 0 && MinhashK % bands == 0,
       s"bands must evenly divide MinhashK=$MinhashK, got $bands")
-    val blocks = spread(df).select(col(idCol).as("__id"),
-      struct(blockCols.map(col): _*).cast("string").as("__blk"))
-    val base = sigSetsBase(df, idCol, textCol, shingleN)
-      .join(blocks, Seq("__id")).persist()
-    val pairs = minhashPairsCore(base,
-      bandBucketsFromSigs(base, bands, Some(col("__blk"))), threshold,
+    val base = shingleSets(df, idCol, textCol, shingleN, blockCols,
+      minhashAggs).persist()
+    try minhashPairsCore(base, bandBucketsFromSigs(base, bands), threshold,
       maxBucket, candidateBudget)
-    base.unpersist()
-    pairs
+    finally base.unpersist()
   }
 
   /** candidate self-join + exact-Jaccard verify shared by the
@@ -309,44 +317,72 @@ object Dedup {
     // persisted counts frame, so the guard adds one trivial agg, not
     // a second counting pass (measured: the naive double-count read
     // 1.21x on qp_minhash_capped in the r14 close A/B)
+    val keys = blkKeys(buckets) :+ "__band"
     var capCounts: Option[DataFrame] = None
     val kept =
       if (maxBucket <= 0) {
-        preflightCandidates(buckets, Seq("__band"), candidateBudget,
+        preflightCandidates(buckets, keys, candidateBudget,
           "minhash banding", guidance)
         buckets
       } else {
         // two passes over the SMALL (id, band) frame: count, then an
         // anti-join against the hot keys — never a window sort
-        val counts = buckets.groupBy("__band")
+        val counts = buckets.groupBy(keys.map(col): _*)
           .agg(count(lit(1)).as("__n")).persist()
         capCounts = Some(counts)
         if (candidateBudget > 0)
           checkOccupancy(counts.filter(col("__n") <= maxBucket),
             candidateBudget, "minhash banding", guidance)
-        val hot = counts.filter(col("__n") > maxBucket).select("__band")
-        buckets.join(hot, Seq("__band"), "left_anti")
+        val hot = counts.filter(col("__n") > maxBucket)
+          .select(keys.map(col): _*)
+        buckets.join(hot, keys, "left_anti")
       }
-    val candidates = kept.select(col("__band"), col("__id").as("a_id"))
-      .join(kept.select(col("__band"), col("__id").as("b_id")),
-        Seq("__band"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    // exact-Jaccard verify: join the cached shingle sets by id — array
-    // payloads move once per candidate side, never through buckets
-    val pairs = candidates
-      .join(base.select(col("__id").as("a_id"), col("__sh").as("__sha")), "a_id")
-      .join(base.select(col("__id").as("b_id"), col("__sh").as("__shb")), "b_id")
+    try {
+      def side(id: String) =
+        kept.select(keys.map(col) :+ col("__id").as(id): _*)
+      val candidates = side("a_id").join(side("b_id"), keys)
+        .filter(col("a_id") < col("b_id"))
+        .select("a_id", "b_id").distinct()
+      verifyJaccard(candidates, base, base, threshold)
+    } finally capCounts.foreach(_.unpersist())
+  }
+
+  /** Exact pairs `(a_id, b_id, jac)` with Jaccard ≥ `threshold` from
+    * rows carrying both sorted shingle sets `__sha`/`__shb`: the
+    * compiled [[SortedOverlap]] merge-scan per pair with a
+    * threshold-bound early exit (-1 = provably below threshold, a
+    * strictly looser bound than the rounded jac filter — never drops a
+    * pair that filter would keep). array_intersect would build a hash
+    * set per pair, the dominant stage cost (MEASUREMENTS.md §r7:
+    * verify was 2.8-3.0 s of 7.5 s). */
+  private def jaccardAtLeast(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
       .withColumn("__i",
         VectorExprs.sortedOverlap(col("__sha"), col("__shb"), threshold))
       .filter(col("__i") >= 0)
       .select(col("a_id"), col("b_id"),
         jacFromInter(col("__i"), col("__sha"), col("__shb")).as("jac"))
       .filter(col("jac") >= threshold)
+
+  /** The one exact-Jaccard verify of the candidate generators
+    * (banded minhash, index probe, ppjoin): join the `(a_id, b_id)`
+    * candidates to the `(__id, __sh)` set frames by id — array payloads
+    * move once per candidate side, never through buckets — then
+    * [[jaccardAtLeast]]. shuffle_hash on the sets sides: the pair side
+    * carries the __sha arrays after the first join — an SMJ would SORT
+    * those wide rows by b_id; the hash join builds on the
+    * (one-row-per-doc, so unskewable) sets side and only exchanges the
+    * wide rows. The small output is localCheckpoint'd so callers can
+    * release their caches before returning. */
+  private def verifyJaccard(cands: DataFrame, setsA: DataFrame,
+      setsB: DataFrame, threshold: Double): DataFrame =
+    jaccardAtLeast(cands
+        .join(setsA.select(col("__id").as("a_id"), col("__sh").as("__sha"))
+          .hint("shuffle_hash"), "a_id")
+        .join(setsB.select(col("__id").as("b_id"), col("__sh").as("__shb"))
+          .hint("shuffle_hash"), "b_id"),
+        threshold)
       .localCheckpoint()
-    capCounts.foreach(_.unpersist())
-    pairs
-  }
 
   /** On-disk incremental MinHash-LSH dedup index — the "corpus grows
     * daily" deployment shape: dedup a new batch against an indexed
@@ -377,7 +413,7 @@ object Dedup {
       nBuckets: Int, mode: String): Unit = {
     require(bands > 0 && MinhashK % bands == 0 && nBuckets >= 1,
       "bands must divide MinhashK; nBuckets >= 1")
-    val base = sigSetsBase(df, idCol, textCol, shingleN).persist()
+    val base = sigSets(df, idCol, textCol, shingleN).persist()
     // repartition ON the directory key: one writer per bucket slice,
     // not shufflePartitions × nBuckets micro-files (scale by raising
     // shuffle partitions — writers stay aligned to directories)
@@ -405,7 +441,7 @@ object Dedup {
       newDocs: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 4, bands: Int = 4,
       nBuckets: Int = 64): DataFrame = {
-    val base = sigSetsBase(newDocs, idCol, textCol, shingleN).persist()
+    val base = sigSets(newDocs, idCol, textCol, shingleN).persist()
     val newBands = bandBucketsFromSigs(base, bands)
       .withColumn("__bkt",
         pmod(hash60(col("__band")), lit(nBuckets.toLong)))
@@ -427,18 +463,7 @@ object Dedup {
       .distinct().collect().map(_.getLong(0)).toSeq
     val oldSets = spark.read.parquet(s"$dir/sets")
       .filter(col("__bkt").isin(aBkts: _*))
-    val pairs = candidates
-      .join(oldSets.select(col("__id").as("a_id"),
-        col("__sh").as("__sha")), "a_id")
-      .join(base.select(col("__id").as("b_id"),
-        col("__sh").as("__shb")), "b_id")
-      .withColumn("__i",
-        VectorExprs.sortedOverlap(col("__sha"), col("__shb"), threshold))
-      .filter(col("__i") >= 0)
-      .select(col("a_id"), col("b_id"),
-        jacFromInter(col("__i"), col("__sha"), col("__shb")).as("jac"))
-      .filter(col("jac") >= threshold)
-      .localCheckpoint()
+    val pairs = verifyJaccard(candidates, oldSets, base, threshold)
     candidates.unpersist(); base.unpersist()
     pairs
   }
@@ -480,7 +505,7 @@ object Dedup {
   def ppjoinPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 4,
       candidateBudget: Long = DefaultCandidateBudget): DataFrame =
-    ppjoinImpl(df, idCol, textCol, threshold, shingleN, Nil,
+    ppjoinCorpus(df, idCol, textCol, threshold, shingleN, Nil,
       candidateBudget)
 
   /** [[ppjoinPairs]] over a pre-built (caller-persisted) [[sigSets]]
@@ -496,7 +521,7 @@ object Dedup {
     ppjoinCore(
       base.select(col("__id"), explode(col("__sh")).as("__h")),
       _ => base.select(col("__id"), col("__sh")),
-      threshold, blk = false, candidateBudget)
+      threshold, candidateBudget)
 
   /** [[ppjoinPairs]] run INSIDE caller-supplied blocking keys — the
     * exact sub-quadratic escape for vocabulary-SATURATED corpora
@@ -519,26 +544,15 @@ object Dedup {
       candidateBudget: Long = DefaultCandidateBudget): DataFrame = {
     require(blockCols.nonEmpty,
       "blockCols must be non-empty — use ppjoinPairs for the unblocked join")
-    ppjoinImpl(df, idCol, textCol, threshold, shingleN, blockCols,
+    ppjoinCorpus(df, idCol, textCol, threshold, shingleN, blockCols,
       candidateBudget)
   }
 
-  private def ppjoinImpl(df: DataFrame, idCol: String, textCol: String,
+  /** ppjoin over a raw corpus: the distinct `(__id, [__blk], __h)`
+    * base from the one corpus explode, persisted for its consumers. */
+  private def ppjoinCorpus(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleN: Int, blockCols: Seq[String],
-      candidateBudget: Long = DefaultCandidateBudget): DataFrame = {
-    val blk = blockCols.nonEmpty
-    val src = if (blk) spread(df)
-        .withColumn("__blk", struct(blockCols.map(col): _*))
-      else spread(df)
-    val blkCols: Seq[Column] = if (blk) Seq(col("__blk")) else Nil
-    val exploded = src.select(col(idCol).as("__id") +: blkCols :+
-      explode(charShingles(col(textCol), shingleN)).as("__s"): _*)
-    ppjoinFromShingles(exploded, threshold, blk, candidateBudget)
-  }
-
-  private def ppjoinFromShingles(exploded: DataFrame, threshold: Double,
-      blk: Boolean,
-      candidateBudget: Long = DefaultCandidateBudget): DataFrame = {
+      candidateBudget: Long): DataFrame = {
     // MEMORY_AND_DISK_SER, not the default: inside a query SUITE these
     // frames compete for storage memory with neighboring queries'
     // caches — an evicted default-level block is silently RECOMPUTED
@@ -546,12 +560,9 @@ object Dedup {
     // measured as a 2.4× in-suite vs isolated gap at sf0.1. Serialized
     // blocks shrink the footprint and evictions spill to local disk
     // instead of recomputing.
-    val diskSer = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val blkCols: Seq[Column] = if (blk) Seq(col("__blk")) else Nil
-    val base = exploded
-      .select(col("__id") +: blkCols :+ hash60(col("__s")).as("__h"): _*)
+    val base = shingledCorpus(df, idCol, textCol, shingleN, blockCols)
       .distinct()
-      .persist(diskSer)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // verify sets ONLY for docs that survived candidate pruning: the
     // semi-join runs BEFORE collect_set, so non-candidate docs (the
     // overwhelming majority at corpus scale after rare-first pruning)
@@ -559,8 +570,8 @@ object Dedup {
     val pairs = ppjoinCore(base,
       candIds => base.join(candIds, Seq("__id"), "left_semi")
         .groupBy("__id")
-        .agg(sort_array(collect_set(col("__h"))).as("__sh")),
-      threshold, blk, candidateBudget)
+        .agg(shingleSet),
+      threshold, candidateBudget)
     base.unpersist()
     pairs
   }
@@ -573,14 +584,11 @@ object Dedup {
     * [[sigSets]] table. */
   private def ppjoinCore(base: DataFrame,
       setsFor: DataFrame => DataFrame, threshold: Double,
-      blk: Boolean,
-      candidateBudget: Long = DefaultCandidateBudget): DataFrame = {
+      candidateBudget: Long): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold in (0, 1]")
-    // one composite block column; every join/groupBy below keys on
-    // (__blk, __h) when blocked and plain __h when not — the unblocked
-    // plan is bit-identical to the pre-blocking operator
-    val blkCols: Seq[Column] = if (blk) Seq(col("__blk")) else Nil
-    val keyCols: Seq[String] = if (blk) Seq("__blk", "__h") else Seq("__h")
+    // every join/groupBy below keys on (__blk, __h) when blocked and
+    // plain __h when not
+    val keyCols = blkKeys(base) :+ "__h"
     val diskSer = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val freq = base.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__f"))
@@ -665,31 +673,8 @@ object Dedup {
     val candMat = candidates.persist(diskSer)
     val candIds = candMat.select(col("a_id").as("__id"))
       .union(candMat.select(col("b_id").as("__id"))).distinct()
-    // sets are sorted ONCE at set build (per doc): the verify then
-    // runs the compiled SortedOverlap merge-scan per PAIR with a
-    // threshold-bound early exit — array_intersect would build a hash
-    // set per pair, the dominant stage cost (MEASUREMENTS.md §r7: verify was
-    // 2.8-3.0 s of 7.5 s)
     val sets = setsFor(candIds)
-    // shuffle_hash on the sets side: the pair side carries the __sha
-    // arrays after the first join — an SMJ would SORT those wide rows
-    // by b_id; the hash join builds on the (one-row-per-doc, so
-    // unskewable) sets side and only exchanges the wide rows
-    val pairs = candMat
-      .join(sets.select(col("__id").as("a_id"), col("__sh").as("__sha"))
-        .hint("shuffle_hash"), "a_id")
-      .join(sets.select(col("__id").as("b_id"), col("__sh").as("__shb"))
-        .hint("shuffle_hash"), "b_id")
-      .withColumn("__i",
-        VectorExprs.sortedOverlap(col("__sha"), col("__shb"), threshold))
-      // -1 = early exit: provably below threshold (a strictly looser
-      // bound than the rounded jac filter below — never drops a pair
-      // that filter would keep)
-      .filter(col("__i") >= 0)
-      .select(col("a_id"), col("b_id"),
-        jacFromInter(col("__i"), col("__sha"), col("__shb")).as("jac"))
-      .filter(col("jac") >= threshold)
-      .localCheckpoint()
+    val pairs = verifyJaccard(candMat, sets, sets, threshold)
     prefix.unpersist()
     candMat.unpersist()
     pairs
@@ -1028,35 +1013,50 @@ object Dedup {
     df.join(simhashSigs(df, idCol, textCol), idCol)
 
   /** simhash near-dup pairs within blocking keys: hamming ≤ maxDist.
-    * Blocking bounds the quadratic comparison to each block. */
+    * Blocking bounds the quadratic comparison to each block; the
+    * signature table (a row per doc: id + one long + block key — tiny
+    * next to the corpus) feeds both self-join sides, so it is
+    * materialized once (A/B: 1.4→0.9 s against the lazy form). */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], maxDist: Int,
-      candidateBudget: Long = DefaultCandidateBudget): DataFrame = {
-    // both self-join sides consume the signature table; materialize it
-    // once (a row per doc: id + one long + block keys — the standard
-    // LSH signature table, tiny next to the corpus) so the token
-    // explode + 32-sum aggregation doesn't run twice (A/B: 1.4→0.9 s)
-    val s = withSimhash(df, idCol, textCol)
-      .select((Seq(col(idCol).as("__id"), col("simhash")) ++
-        blockCols.map(col)): _*)
-      .localCheckpoint()
-    // saturation pre-flight (r14): the per-block comparison is
-    // exact-quadratic BY DESIGN — refuse a block whose occupancy
-    // predicts a candidate count past the budget before the self-join
-    preflightCandidates(s, blockCols, candidateBudget,
-      "simhash blocking",
-      "The comparison is exact-quadratic per block by design: block " +
-        "finer (more selective blockCols) or pre-filter with " +
-        "minhashPairsBlocked; raise candidateBudget only if the join " +
-        "size is intended.")
-    val a = s.select((Seq(col("__id").as("a_id"),
-      col("simhash").as("__sa")) ++ blockCols.map(col)): _*)
-    val b = s.select((Seq(col("__id").as("b_id"),
-      col("simhash").as("__sb")) ++ blockCols.map(col)): _*)
-    a.join(b, blockCols).filter(col("a_id") < col("b_id"))
-      .withColumn("dist", hamming(col("__sa"), col("__sb")))
-      .filter(col("dist") <= maxDist)
-      .select("a_id", "b_id", "dist")
+      candidateBudget: Long = DefaultCandidateBudget): DataFrame =
+    blockedSelfJoin(withSimhash(df, idCol, textCol)
+        .select(col(idCol).as("__id") +: blockKey(blockCols) :+
+          col("simhash").as("__s"): _*),
+      "__s", "simhash blocking", candidateBudget) {
+      _.withColumn("dist", hamming(col("__sa"), col("__sb")))
+        .filter(col("dist") <= maxDist)
+        .select("a_id", "b_id", "dist")
+    }
+
+  /** guidance of the exact-quadratic blocked generators' pre-flight */
+  private val quadraticGuidance =
+    "The comparison is exact-quadratic per block by design: block " +
+      "finer (more selective blockCols) or pre-filter with " +
+      "minhashPairsBlocked; raise candidateBudget only if the join " +
+      "size is intended."
+
+  /** The one blocked self-join of the exact-quadratic generators
+    * (n-gram Jaccard, containment, simhash): `s` = one row per doc
+    * `(__id, [__blk], payload)`, persisted for the call (it feeds both
+    * sides and the pre-flight — exchange reuse does not cover its
+    * aggregation, measured 2.5× slower lazy). The saturation pre-flight
+    * (r14) refuses a block whose occupancy predicts a candidate count
+    * past the budget BEFORE the self-join. Each side carries the
+    * payload as `<payload>a` / `<payload>b`; `score` turns the
+    * `a_id < b_id` rows into the output, which is localCheckpoint'd so
+    * the cache releases on return. */
+  private def blockedSelfJoin(s: DataFrame, payload: String, op: String,
+      candidateBudget: Long)(score: DataFrame => DataFrame): DataFrame = {
+    val m = s.persist()
+    try {
+      val keys = blkKeys(m)
+      preflightCandidates(m, keys, candidateBudget, op, quadraticGuidance)
+      def side(id: String, sfx: String) = m.select(col("__id").as(id) +:
+        keys.map(col) :+ col(payload).as(payload + sfx): _*)
+      score(side("a_id", "a").join(side("b_id", "b"), keys)
+        .filter(col("a_id") < col("b_id"))).localCheckpoint()
+    } finally m.unpersist()
   }
 
   /** Near-duplicate CLUSTERS from a pair table: the pairs are an
@@ -1137,77 +1137,26 @@ object Dedup {
       shingleN: Int = 4,
       candidateBudget: Long = DefaultCandidateBudget): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold in (0, 1]")
-    val s = spread(df).select((Seq(col(idCol).as("__id"),
-        explode(charShingles(col(textCol), shingleN)).as("__g")) ++
-        blockCols.map(col)): _*)
-      .withColumn("__h", hash60(col("__g")))
-      .groupBy((col("__id") +: blockCols.map(col)): _*)
-      .agg(sort_array(collect_set(col("__h"))).as("__sh"))
-      .persist()
-    // saturation pre-flight (r14): exact-quadratic per block — see
-    // [[simhashPairs]]
-    preflightCandidates(s, blockCols, candidateBudget,
-      "containment blocking",
-      "The comparison is exact-quadratic per block by design: block " +
-        "finer (more selective blockCols) or pre-filter with " +
-        "minhashPairsBlocked; raise candidateBudget only if the join " +
-        "size is intended.")
-    val a = s.select((Seq(col("__id").as("a_id"),
-      col("__sh").as("__sha")) ++ blockCols.map(col)): _*)
-    val b = s.select((Seq(col("__id").as("b_id"),
-      col("__sh").as("__shb")) ++ blockCols.map(col)): _*)
-    val pairs = a.join(b, blockCols).filter(col("a_id") < col("b_id"))
-      .withColumn("__i",
-        VectorExprs.sortedOverlap(col("__sha"), col("__shb"), 0.0))
-      .withColumn("containment", round(col("__i").cast("double") /
-        least(size(col("__sha")), size(col("__shb"))), 6))
-      .filter(col("containment") >= threshold)
-      .select("a_id", "b_id", "containment")
-      .localCheckpoint()
-    s.unpersist()
-    pairs
+    blockedSelfJoin(shingleSets(df, idCol, textCol, shingleN, blockCols),
+      "__sh", "containment blocking", candidateBudget) {
+      _.withColumn("__i",
+          VectorExprs.sortedOverlap(col("__sha"), col("__shb"), 0.0))
+        .withColumn("containment", round(col("__i").cast("double") /
+          least(size(col("__sha")), size(col("__shb"))), 6))
+        .filter(col("containment") >= threshold)
+        .select("a_id", "b_id", "containment")
+    }
   }
 
   /** exact n-gram Jaccard pairs within blocking keys (quadratic per
-    * block — use only after blocking/LSH has bounded the block size).
-    * The shingle-set aggregation feeds both self-join sides and is
-    * persisted for the duration of the call (exchange reuse does not
-    * cover it — measured 2.5× slower lazy); the small filtered pair
-    * output is localCheckpoint'd so the cache releases on return. */
+    * block — use only after blocking/LSH has bounded the block size):
+    * the one set build, then the blocked self-join with the
+    * [[jaccardAtLeast]] score. Returns (a_id, b_id, jac). */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], threshold: Double,
       shingleN: Int = 4,
-      candidateBudget: Long = DefaultCandidateBudget): DataFrame = {
-    // hash shingles AFTER explode (md5 runs inside whole-stage codegen,
-    // not an interpreted array lambda), then collect the distinct set
-    val s = spread(df).select((Seq(col(idCol).as("__id"),
-        explode(charShingles(col(textCol), shingleN)).as("__g")) ++
-        blockCols.map(col)): _*)
-      .withColumn("__h", hash60(col("__g")))
-      .groupBy((col("__id") +: blockCols.map(col)): _*)
-      .agg(sort_array(collect_set(col("__h"))).as("__sh"))
-      .persist()
-    // saturation pre-flight (r14): exact-quadratic per block — see
-    // [[simhashPairs]]
-    preflightCandidates(s, blockCols, candidateBudget,
-      "ngram-jaccard blocking",
-      "The comparison is exact-quadratic per block by design: block " +
-        "finer (more selective blockCols) or pre-filter with " +
-        "minhashPairsBlocked; raise candidateBudget only if the join " +
-        "size is intended.")
-    val a = s.select((Seq(col("__id").as("a_id"),
-      col("__sh").as("__sha")) ++ blockCols.map(col)): _*)
-    val b = s.select((Seq(col("__id").as("b_id"),
-      col("__sh").as("__shb")) ++ blockCols.map(col)): _*)
-    val pairs = a.join(b, blockCols).filter(col("a_id") < col("b_id"))
-      .withColumn("__i",
-        VectorExprs.sortedOverlap(col("__sha"), col("__shb"), threshold))
-      .filter(col("__i") >= 0)
-      .withColumn("jac", jacFromInter(col("__i"), col("__sha"), col("__shb")))
-      .filter(col("jac") >= threshold)
-      .select("a_id", "b_id", "jac")
-      .localCheckpoint()
-    s.unpersist()
-    pairs
-  }
+      candidateBudget: Long = DefaultCandidateBudget): DataFrame =
+    blockedSelfJoin(shingleSets(df, idCol, textCol, shingleN, blockCols),
+      "__sh", "ngram-jaccard blocking", candidateBudget)(
+      jaccardAtLeast(_, threshold))
 }

@@ -76,6 +76,10 @@ class GraphSpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == want, s"localFinishThreshold=$thr")
     }
+    // and one output schema, nullability included, whichever path
+    // finishes: a caller's schema must not change with graph size
+    assert(GraphOps.sccDF(v, e, localFinishThreshold = 100000).schema ==
+      GraphOps.sccDF(v, e, localFinishThreshold = 0).schema)
     // the counterexample that breaks plain one-shot (min-ancestor,
     // min-descendant) pair equality: 1→3, 1→4, 3→2, 4→2 gives 3 and 4
     // the same (F, B) = (1, 2) although they are separate SCCs — the
@@ -672,6 +676,21 @@ class GraphSpec extends AnyFunSuite {
     def run(p: Int) = GraphOps.robustnessDF(v, e.repartition(p), 1)
       .collect().map(_.toSeq).toSeq
     assert(run(1) == run(5))
+  }
+
+  test("robustnessDF: the hub list is computed once") {
+    // the topK hubs are collected once; as a lazy sort+limit frame
+    // each of its three anti-join uses re-ran the degree aggregation
+    // (32 jobs on this graph, against 17 with the collected list)
+    val v = TradeGraph.vertices(spark, sf)
+    val e = TradeGraph.edges(spark, sf)
+    v.count(); e.count() // the cached tables materialise outside
+    var got: Seq[Long] = Nil
+    val jobs = SparkTestSession.jobsDuring {
+      got = GraphOps.robustnessDF(v, e, topK = 10).collect().head
+        .toSeq.map(_.asInstanceOf[Long])
+    }
+    assert((jobs, got) == ((17, Seq(150L, 150L, 1L, 6666L))))
   }
 
   test("temporalReachDF: time order gates reachability; earliest " +

@@ -154,6 +154,27 @@ class OpsHygieneSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"GraphX referenced from src/main: $hits")
   }
 
+  test("src/main reads no environment outside the entry points") {
+    // an operator tuned by an environment variable is a knob no caller
+    // can see; only the CLI mains and the session factory read the env
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"missing $root")
+    val st = Files.walk(root)
+    val files = try st.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .toList finally st.close()
+    assert(files.size > 50, s"only ${files.size} sources under $root")
+    val entryPoints = Set("Bench.scala", "PlanDump.scala", "Sessions.scala")
+    val hits = files
+      .filterNot(f => entryPoints(f.getFileName.toString))
+      .filter { f =>
+        val src = Files.readString(f)
+        src.contains("sys.env") || src.contains("System.getenv")
+      }
+    assert(hits.isEmpty, s"environment read outside the entry points: $hits")
+  }
+
   test("nearDupClusters leaves no cached frames behind") {
     spark.catalog.clearCache()
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L))
@@ -512,6 +533,18 @@ class OpsHygieneSpec extends AnyFunSuite {
       .filter(col("jac") >= 0.8)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(got == brute)
+    // one verify behind every generator: n-gram Jaccard over ONE
+    // constant block returns ppjoin's exact (a_id, b_id, jac) rows, and
+    // every MinHash row is a ppjoin row with the same jac
+    def rows(p: org.apache.spark.sql.DataFrame) =
+      p.select("a_id", "b_id", "jac").as[(Long, Long, Double)]
+        .collect().toSet
+    val exact = rows(Dedup.ppjoinPairs(d, "doc_id", "text", 0.8))
+    assert(exact.nonEmpty)
+    assert(rows(Dedup.ngramJaccardPairs(d.withColumn("__one", lit(1)),
+      "doc_id", "text", Seq("__one"), 0.8)) == exact)
+    val lsh = rows(Dedup.minhashPairs(d, "doc_id", "text", 0.8))
+    assert(lsh.nonEmpty && lsh.subsetOf(exact))
   }
 
   test("ppjoinPairs leaves no cached frames behind") {
@@ -1374,6 +1407,35 @@ class OpsHygieneSpec extends AnyFunSuite {
       Seq("lang"), threshold = 0.8)
     assert(jac.count() == 0,
       "symmetric Jaccard must suppress the short-in-long pair")
+  }
+
+  test("blocked generators: null block values form one block") {
+    // two identical long texts whose block value is null: every blocked
+    // generator pairs them, as its pre-flight already counted them
+    // as one block. Docs 3 and 4 carry the same text in two different
+    // blocks whose string forms collide ("{x, y, z}"): no generator
+    // may pair them
+    val text = (1 to 40).map(i => s"word$i").mkString(" ")
+    val other = (1 to 40).map(i => s"term$i").mkString(" ")
+    val df = Seq((1L, text, null: String, "k"), (2L, text, null, "k"),
+        (3L, other, "x, y", "z"), (4L, other, "x", "y, z"))
+      .toDF("doc_id", "text", "lang", "src")
+    val blk = Seq("lang", "src")
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      ("minhash", () => Dedup.minhashPairsBlocked(df, "doc_id", "text",
+        blk, 0.8)),
+      ("ppjoin", () => Dedup.ppjoinPairsBlocked(df, "doc_id", "text",
+        blk, 0.8)),
+      ("ngram", () => Dedup.ngramJaccardPairs(df, "doc_id", "text",
+        blk, 0.8)),
+      ("containment", () => Dedup.containmentPairs(df, "doc_id", "text",
+        blk, 0.9)),
+      ("simhash", () => Dedup.simhashPairs(df, "doc_id", "text",
+        blk, maxDist = 3))
+    ).foreach { case (name, run) =>
+      val got = run().select("a_id", "b_id").as[(Long, Long)].collect()
+      assert(got.toSeq == Seq((1L, 2L)), s"$name: ${got.toSeq}")
+    }
   }
 
   test("ndcgAtK: identity 1.0, hand-computed top-2 swap, miss-all 0") {
