@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -35,6 +36,21 @@ import scala.jdk.CollectionConverters._
   *       SPARK_GRAFT_CPUS (default 4)
   */
 object PlanDump {
+  /** `plan` with the ids that differ between runs of one plan masked:
+    * expression ids (`#12`), query-stage ids (a formatted plan's
+    * `Arguments:` line under a `...QueryStage` operator; AQE numbers
+    * stages in the order they become ready), whole-stage-codegen ids,
+    * exchange plan ids and RDD ids. Two runs of the same plan then
+    * read the same, and so do the rounds of an iterative operator. */
+  def normalize(plan: String): String = Seq(
+    """#\d+""" -> "#N",
+    """(QueryStage\n(?:[^\n(][^\n]*\n)*?Arguments: )\d+""" -> "$1N",
+    """\[codegen id : \d+\]""" -> "[codegen id : N]",
+    """\*\(\d+\)""" -> "*(N)",
+    """plan_id=\d+""" -> "plan_id=N",
+    """RDD\[\d+\]""" -> "RDD[N]"
+  ).foldLeft(plan) { case (t, (re, to)) => t.replaceAll(re, to) }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <outDir> <suffix> [prefix ...]")
     val outDir = args(0); val suffix = args(1)
@@ -87,17 +103,20 @@ object PlanDump {
         captured.clear()
         spark.sparkContext.addSparkListener(listener)
         val df = build(n)
-        val finalPlan = df.queryExecution.explainString(FormattedMode)
+        val finalPlan = normalize(df.queryExecution.explainString(FormattedMode))
         df.write.format("noop").mode("overwrite").save()
         org.apache.spark.GraftBus.drain(spark.sparkContext)
         val execs = captured.asScala.toVector.sortBy(_._1)
+          .map { case (id, desc, plan) => (id, desc, normalize(plan)) }
         // warm run: codegen and plan compile were paid above
         System.gc()
         jobStart.clear(); jobLines.clear(); stageLines.clear()
         taskRunMs.set(0L)
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         build(n).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
         org.apache.spark.GraftBus.drain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(listener)
         val sb = new java.lang.StringBuilder
@@ -120,7 +139,8 @@ object PlanDump {
           s"${seen.size} distinct plans, $repeats repeated ==\n")
         sb.append(f"\n== warm run: wall $wall%.3f s, " +
           s"${jobLines.size} jobs, ${stageLines.size} stages, " +
-          f"task run time ${taskRunMs.get / 1000.0}%.3f s ==\n")
+          f"task run time ${taskRunMs.get / 1000.0}%.3f s, " +
+          s"$compiles codegen compiles ==\n")
         jobLines.asScala.foreach(l => sb.append(l).append('\n'))
         stageLines.asScala.foreach(l => sb.append(l).append('\n'))
         Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"),

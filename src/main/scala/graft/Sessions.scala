@@ -6,6 +6,17 @@ import org.apache.spark.sql.SparkSession
   * [[session]], so a plan pinned in a spec is planned under the
   * config the bench times. */
 object Sessions {
+  /** Entries in Spark's cache of compiled whole-stage-codegen classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). At 100 the
+    * cache thrashes, so warm queries pay Janino compiles again: one
+    * warm pass of PageRank (10 rounds), betweenness and ppjoin on the
+    * seeded sf0.01 tables (`local[3]`, 4-core host) compiled 196
+    * classes at 100 entries and 0 at 2,000, and the three queries'
+    * summed time per warm pass fell from 8.9-10.3 s to 5.6-6.6 s. In
+    * local mode about half of the compiles run on executor task
+    * threads and half on the driver, so each stage takes two entries. */
+  val CodegenCacheEntries = 2000
+
   /** `local[cpus]` session with `cpus` shuffle partitions. Returns the
     * active session when one exists (Spark applies static confs and
     * extensions only at first build, so the parser extension is
@@ -30,6 +41,7 @@ object Sessions {
     // the exploded corpus. Measured: minhash 1.62 -> 1.36 s.
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       100000)
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
     // long-running-driver hygiene (the standard cluster settings):
     // AppStatusListener retains 1000 jobs/stages + 100k tasks by
     // default even with the UI off — a suite of hundreds of queries

@@ -278,11 +278,16 @@ object GraphOps {
       .localCheckpoint(true)
     // edges naming an undeclared vertex are dropped up front (the
     // pageRankDF/hitsDF convention): the refinement never labels such
-    // a vertex, and the Tarjan finish indexes only declared ones
-    val e0 = edges.select(col("src"), col("dst"))
+    // a vertex, and the Tarjan finish indexes only declared ones.
+    // Duplicate edges stay until the distributed refinement starts:
+    // the Tarjan finish tolerates them, so a graph that finishes
+    // locally pays no shuffle to drop them, and its edge gate counts
+    // raw edges (an upper bound of the distinct count)
+    val raw = edges.select(col("src"), col("dst"))
       .join(cls.select(col("id").as("src")), Seq("src"), "left_semi")
       .join(cls.select(col("id").as("dst")), Seq("dst"), "left_semi")
-      .distinct().persist()
+      .persist()
+    var e0 = raw
     // finalized (id, scc) slices accumulate here and union ONCE at
     // the end — each references a checkpointed frame, so no per-round
     // materialization of the growing result is needed
@@ -349,7 +354,14 @@ object GraphOps {
         done += labeled.toSeq.toDF("id", "scc")
         finished = true
       } else {
-        val eRev = eSame.select(col("dst").as("src"), col("src").as("dst"))
+        // every hop's message join carries each duplicate edge, so the
+        // first distributed round drops them once; later rounds derive
+        // their same-class edges from the deduplicated e0
+        val eRef = if (outer > 1) eSame else {
+          e0 = raw.distinct().persist()
+          e0
+        }
+        val eRev = eRef.select(col("dst").as("src"), col("src").as("dst"))
         // DIRECTION-TAGGED edge frame: f-messages flow src→dst, b-messages
         // flow dst→src — one 2|E| frame lets one join + one groupBy carry
         // BOTH propagation directions per hop (r11; the r10 shape ran the
@@ -362,7 +374,7 @@ object GraphOps {
         // eSame is shuffle-free, and a checkpoint here would pay one
         // extra materialization job per outer round — measured to cancel
         // the step fusion's win
-        val eBoth = eSame.select(col("src"), col("dst"), lit(true).as("__fwd"))
+        val eBoth = eRef.select(col("src"), col("dst"), lit(true).as("__fwd"))
           .unionByName(eRev.select(col("src"), col("dst"),
             lit(false).as("__fwd")))
         // fused forward/backward min-label fixpoint: one loop frame
@@ -468,6 +480,7 @@ object GraphOps {
       }
     }
     e0.unpersist()
+    raw.unpersist()
     if (done.isEmpty)
       cls.select(col("id"), col("cls").as("scc")) // empty vertex set
     else done.reduce(_ unionByName _)

@@ -18,7 +18,8 @@ class SessionsSpec extends AnyFunSuite {
       "spark.sql.ansi.enabled" -> "false",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "100000",
-      "spark.sql.ui.retainedExecutions" -> "8"
+      "spark.sql.ui.retainedExecutions" -> "8",
+      "spark.sql.codegen.cache.maxEntries" -> "2000"
     ).foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
     Map(
       "spark.ui.enabled" -> "false",

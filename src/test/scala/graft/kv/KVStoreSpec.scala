@@ -41,6 +41,48 @@ class KVStoreSpec extends AnyFunSuite {
     assert(kv.get("db", "flat", "k0").contains("v100"))
   }
 
+  test("point ops run no Spark job") {
+    val kv = new KVStore(spark)
+    val jobs = SparkTestSession.jobsDuring {
+      for (i <- 1 to 100) kv.put("db", "hot", s"k$i", s"v$i")
+      for (i <- 1 to 100) assert(kv.get("db", "hot", s"k$i").contains(s"v$i"))
+      for (i <- 1 to 10) assert(kv.delete("db", "hot", s"k$i"))
+    }
+    assert(jobs == 0)
+    assert(kv.keys("db", "hot").size == 90)
+  }
+
+  test("bucket names containing a slash do not collide") {
+    val kv = new KVStore(spark)
+    kv.put("a/b", "c", "k", "1")
+    kv.put("a", "b/c", "k", "2")
+    assert(kv.get("a/b", "c", "k").contains("1"))
+    assert(kv.get("a", "b/c", "k").contains("2"))
+  }
+
+  test("a null key is rejected and leaves the bucket intact") {
+    val kv = new KVStore(spark)
+    kv.put("db", "b", "k1", "v1")
+    kv.put("db", "b", "k2", "v2")
+    intercept[IllegalArgumentException](kv.put("db", "b", null, "x"))
+    assert(kv.keys("db", "b").toSet == Set("k1", "k2"))
+    assert(kv.get("db", "b", null).isEmpty)
+    assert(!kv.delete("db", "b", null))
+  }
+
+  test("a null value round-trips; asDataFrame is a snapshot") {
+    val kv = new KVStore(spark)
+    kv.put("db", "b", "k1", null)
+    assert(kv.get("db", "b", "k1") == Some(null))
+    val before = kv.asDataFrame("db", "b")
+    kv.put("db", "b", "k2", "v2")
+    assert(before.collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("k1", null)))
+    assert(kv.asDataFrame("db", "b").count() == 2)
+    assert(before.schema == kv.asDataFrame("db", "b").schema)
+    assert(!before.schema("key").nullable && before.schema("value").nullable)
+  }
+
   test("grant/revoke maintains the ACL catalog") {
     val g = new GraftSession(spark, new Catalog(spark))
     g.command("grant READ on database.class.customer to reader")
