@@ -99,6 +99,36 @@ object Bench {
       s""""ms":$ms}"""
   }
 
+  /** Where a run's full record goes: a full run's (no name prefixes)
+    * to `BENCH_FULL.json` at the repo root; a name-prefix run's to
+    * `target/BENCH_<prefixes>.json`, named for its sorted prefixes, so
+    * a targeted run never overwrites the full-suite record. */
+  private[graft] def recordFile(root: java.nio.file.Path,
+      prefixes: Seq[String]): java.nio.file.Path =
+    if (prefixes.isEmpty) root.resolve("BENCH_FULL.json")
+    else root.resolve("target").resolve(
+      prefixes.distinct.sorted.map(_.replaceAll("[^A-Za-z0-9_.-]", "_"))
+        .mkString("BENCH_", "+", ".json"))
+
+  /** The full record: per query its median `sec` (-1 = failed), the
+    * MAD as a percentage of the median `mad_pct`, and the timed
+    * `rounds`; plus the total, group subtotals and calibration. */
+  private[graft] def fullRecord(med: Seq[(String, Double)],
+      madPct: Map[String, Long], rounds: Map[String, Int], sf: String,
+      calib: Double): String = {
+    def sec(v: Double) = if (v < 0) -1 else math.round(v * 10000) / 10000.0
+    val perQuerySecs = med.map { case (n, v) => s"${jstr(n)}:${sec(v)}" }
+      .mkString("{", ",", "}")
+    val rows = med.map { case (n, v) =>
+      s"${jstr(n)}:{" + s""""sec":${sec(v)},""" +
+        s""""mad_pct":${madPct(n)},"rounds":${rounds(n)}}"""
+    }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${secs(okSum(med))},""" +
+      s""""unit":"sec","queries":$perQuerySecs,"sf":${jstr(sf)},""" +
+      s""""calibration_sec":$calib,"groups":${groupTotals(med)},""" +
+      s""""per_query":$rows}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val rounds = math.max(1,
@@ -198,41 +228,26 @@ object Bench {
         val m = median(times(n))
         if (m <= 0) 0L else math.round(mad(times(n)) * 100 / m)
       })).toMap
-    val perQuerySecs = med.map { case (n, v) =>
-      s"${jstr(n)}:${if (v < 0) -1 else math.round(v * 10000) / 10000.0}"
-    }.mkString("{", ",", "}")
-    val fullJson = {
-      val rows = names.map { n =>
-        val v = med.toMap.apply(n)
-        s"${jstr(n)}:{" +
-          s""""sec":${if (v < 0) -1 else math.round(v * 10000) / 10000.0},""" +
-          s""""mad_pct":${madPct(n)},"rounds":${times(n).size}}"""
-      }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${secs(okSum(med))},""" +
-        s""""unit":"sec","queries":$perQuerySecs,"sf":${jstr(sfDir)},""" +
-        s""""calibration_sec":$calib,"groups":${groupTotals(med)},""" +
-        s""""per_query":$rows}"""
-    }
+    val rec = fullRecord(med, madPct, names.map(n => n -> times(n).size).toMap,
+      sfDir, calib)
     // anchor to the repo root: walk up from the launch cwd to the
     // nearest directory containing build.sbt (sbt run from a
     // subdirectory would otherwise silently drop the artifact there);
     // no build.sbt anywhere above → fall back to the cwd
-    val benchOut = {
+    val root = {
       val cwd = java.nio.file.Paths.get(
         System.getProperty("user.dir")).toAbsolutePath
       Iterator.iterate(cwd)(_.getParent).takeWhile(_ != null).take(6)
         .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
         .getOrElse(cwd)
-        .resolve("BENCH_FULL.json")
     }
-    // filtered (local-timing) runs must not clobber the committed
-    // full-suite artifact with a partial record
-    if (args.isEmpty) {
-      try java.nio.file.Files.writeString(benchOut, fullJson + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $benchOut write failed: $e") }
-      println(s"#F full per-query record in $benchOut")
-    }
+    val out = recordFile(root, args.toSeq)
+    try {
+      java.nio.file.Files.createDirectories(out.getParent)
+      java.nio.file.Files.writeString(out, rec + "\n")
+      println(s"#F full per-query record in $out")
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $out write failed: $e") }
     println(summaryLine(med, sfDir.split('/').last, calib))
     spark.stop()
   }

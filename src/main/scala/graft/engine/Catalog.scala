@@ -1,6 +1,11 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Union}
+import org.apache.spark.sql.classic.GraftPlanBridge
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Class registry (SURVEY.md §1.1: OClass → table, single inheritance,
@@ -16,6 +21,20 @@ import org.apache.spark.sql.functions._
   * Scale note: each class is backed by a provider function so a
   * deployment can point it at a partitioned/bucketed parquet or Delta
   * root; nothing here assumes single files or collects to the driver.
+  *
+  * Versions: a class's current [[ClassDef]] instance IS its data
+  * version. Every data write, DDL change, `setRidPosCol`, commit and
+  * rollback installs a new (or restored) instance, and the catalog
+  * keeps the analysed plans of the current instance only ([[table]]).
+  * Reads get a re-instanced copy, so a read runs no provider, lists
+  * no files, analyses nothing and launches no job. As in Couchbase
+  * Analytics (PAPERS.md), writes land in a cheap in-memory component
+  * and reads see an immutable, already-prepared image:
+  *  - UPDATE/DELETE materialise the class's next version with one
+  *    eager `localCheckpoint` ([[materialise]]);
+  *  - INSERT rows go to a driver-side delta that reads union with the
+  *    base ([[append]]), folded in by the next UPDATE/DELETE or past
+  *    [[DeltaRows]] rows.
   */
 /** @param srcIsArray LINKSET/LINKLIST stored as an array of target
   *        keys in `srcKey` (the reference's RID-collection fields,
@@ -55,21 +74,48 @@ final class Catalog(spark: SparkSession) {
   def byClusterId(id: Int): Option[ClassDef] =
     classes.values.find(_.clusterId == id)
 
-  /** Raw (non-polymorphic) table of one class, with `_rid` and `_class`
-    * metadata columns attached when the class declares a rid column
-    * (`@rid`/`@class` pseudo-attributes, `OSQLFilterItemRecordAttrib`). */
-  def table(name: String): DataFrame = {
-    val d = get(name)
-    val df = d.provider(spark)
-    d.ridPosCol match {
-      case Some(pc) =>
-        df.withColumn("_rid",
-            struct(lit(d.clusterId).as("clusterId"),
-              col(pc).cast("long").as("pos")))
-          .withColumn("_class", lit(d.name))
-      case None => df.withColumn("_class", lit(d.name))
+  /** One class version's analysed plans: `data` the provider's rows,
+    * `table` those rows under the one projection that adds the
+    * metadata columns ([[table]]), analysed on first use. */
+  private final class Scan(val version: ClassDef, val data: LogicalPlan) {
+    lazy val table: LogicalPlan = {
+      val meta = version.ridPosCol.map(pc => "_rid" ->
+          struct(lit(version.clusterId).as("clusterId"),
+            col(pc).cast("long").as("pos"))).toSeq :+
+        ("_class" -> lit(version.name))
+      GraftPlanBridge.select(spark, data, meta.map(_._1).toSet,
+        meta.map { case (n, c) => c.as(n) }).queryExecution.analyzed
     }
   }
+
+  /** the [[Scan]] of each class's current version; only the current
+    * version of a class is kept. */
+  private val scans = scala.collection.mutable.Map[String, Scan]()
+
+  private def scanOf(d: ClassDef): Scan = {
+    val key = d.name.toLowerCase
+    scans.get(key).filter(_.version eq d).getOrElse {
+      val s = new Scan(d, d.provider(spark).queryExecution.analyzed)
+      scans(key) = s
+      s
+    }
+  }
+
+  /** The stored rows of one class (the provider's columns, no metadata):
+    * a copy of the current version's analysed plan, with attribute ids
+    * no other call shares. */
+  def data(name: String): DataFrame =
+    GraftPlanBridge.frame(spark,
+      GraftPlanBridge.fresh(scanOf(get(name)).data))
+
+  /** Raw (non-polymorphic) table of one class, with `_rid` and `_class`
+    * metadata columns attached when the class declares a rid column
+    * (`@rid`/`@class` pseudo-attributes, `OSQLFilterItemRecordAttrib`):
+    * like [[data]], a copy of the version's analysed plan, so a call
+    * neither runs the provider nor analyses anything. */
+  def table(name: String): DataFrame =
+    GraftPlanBridge.frame(spark,
+      GraftPlanBridge.fresh(scanOf(get(name)).table))
 
   /** Polymorphic scan: the class plus all transitive subclasses,
     * unioned by name with nulls for missing columns — the Spark
@@ -119,14 +165,14 @@ final class Catalog(spark: SparkSession) {
       .nextOption()
 
   // ---- mutation (DML/DDL surface, §2.9) ---------------------------
-  private val writeCounts = scala.collection.mutable.Map[String, Int]()
 
   /** replace a class's backing data (INSERT/UPDATE/DELETE rewrite).
     *
-    * In-memory mode, every 8th write truncates lineage with an eager
-    * localCheckpoint — otherwise each DML layers plan nodes on the
-    * previous provider and repeated writes grow the plan without bound
-    * (same fix shape as the Traverse loop).
+    * In-memory mode the frame becomes the class's provider as it is;
+    * UPDATE and DELETE hand in a frame [[materialise]]d already. A
+    * lazy rewrite (DDL, bulk append) whose analysed plan passes
+    * [[MaxPlanNodes]] is checkpointed here, so repeated lazy rewrites
+    * cannot stack a plan without bound.
     *
     * Durable mode ([[enableDurability]]) commits each rewrite as a new
     * parquet version directory + atomically-replaced `_current` marker
@@ -156,13 +202,96 @@ final class Catalog(spark: SparkSession) {
         // transaction: the provider swap makes the write visible to
         // this session (read-your-writes) while nothing touches disk
         // until commitTx
-        val n = writeCounts.getOrElse(key, 0) + 1
-        writeCounts(key) = n
-        val stored = if (n % 8 == 0) df.localCheckpoint(true) else df
+        val stored =
+          if (df.queryExecution.analyzed.collect { case p => p }.size >
+              MaxPlanNodes) df.localCheckpoint(true)
+          else df
         classes(key) = d.copy(provider = _ => stored)
         if (txActive) txPendingData(key) = stored
     }
+    scans.remove(key); deltas.remove(key)
     fulltext.invalidate(key) // postings over the old data are stale
+  }
+
+  /** plan size past which a lazy in-memory rewrite is checkpointed. */
+  private val MaxPlanNodes = 64
+
+  /** INSERT rows not yet folded into the class's base data: `owner` is
+    * the class version they belong to, `base` the analysed plan of the
+    * version before the first of them. */
+  private final class Delta(val owner: ClassDef, val base: LogicalPlan,
+      val rows: Vector[InternalRow])
+  private val deltas = scala.collection.mutable.Map[String, Delta]()
+
+  /** delta size past which an [[append]] folds the delta into the base
+    * (one eager localCheckpoint). */
+  private val DeltaRows = 1024
+
+  /** Append rows that carry the class's stored columns, in order.
+    *
+    * In-memory mode (and while a transaction buffers) rows that plan to
+    * a local relation and cast up to the class's column types join the
+    * class's driver-side delta: the new version reads `base ∪ delta`,
+    * and the append builds no plan over the data, launches no job and
+    * analyses nothing but the rows. Other appends — a distributed
+    * frame, a type the union would widen, durable commits — replace
+    * the data with the by-name union, as a rewrite. */
+  def append(name: String, rows: DataFrame): Unit = {
+    val d = get(name)
+    val key = d.name.toLowerCase
+    val (base, prior) = baseOf(d)
+    val target = base.output
+    val fits = (durableRoot.isEmpty || txActive) &&
+      rows.schema.fields.toSeq.corresponds(target)((f, a) =>
+        f.name == a.name && Cast.canUpCast(f.dataType, a.dataType))
+    val local =
+      if (!fits) None
+      else rows.select(target.map(a => col(a.name).cast(a.dataType)): _*)
+        .queryExecution.optimizedPlan match {
+          case l: LocalRelation => Some(l.data)
+          case _ => None
+        }
+    local match {
+      case None => replaceData(name, data(name).unionByName(rows))
+      case Some(added) =>
+        val all = prior ++ added
+        val union = GraftPlanBridge.frame(spark, Union(
+          GraftPlanBridge.fresh(base),
+          LocalRelation(target.map(_.withNullability(true).newInstance()),
+            all)))
+        if (all.size > DeltaRows)
+          replaceData(name, materialise(name, union)._1)
+        else {
+          val next = d.copy(provider = _ => union)
+          classes(key) = next
+          scans(key) = new Scan(next, union.queryExecution.analyzed)
+          deltas(key) = new Delta(next, base, all)
+          if (txActive) txPendingData(key) = union
+          fulltext.invalidate(key)
+        }
+    }
+  }
+
+  /** the base plan of a class version and the delta rows read with it */
+  private def baseOf(d: ClassDef): (LogicalPlan, Vector[InternalRow]) =
+    deltas.get(d.name.toLowerCase).filter(_.owner eq d)
+      .map(dl => (dl.base, dl.rows)).getOrElse((scanOf(d).data, Vector.empty))
+
+  /** Materialise `df`, a class's next version, with one eager
+    * localCheckpoint; the class itself is unchanged until
+    * [[replaceData]]. Returns the stored frame and the metrics that
+    * `Dataset.observe` calls in `df` collected during that one job.
+    * Over a materialised base, `df` is coalesced to the base's
+    * partition count, so folding delta rows in (each read of a delta
+    * adds its own partitions) does not grow the class's partitions. */
+  def materialise(name: String,
+      df: DataFrame): (DataFrame, Map[String, Row]) = {
+    val out = baseOf(get(name))._1 match {
+      case r: LogicalRDD => df.coalesce(math.max(1, r.rdd.getNumPartitions))
+      case _ => df
+    }
+    val stored = out.localCheckpoint(true)
+    (stored, out.queryExecution.observedMetrics)
   }
 
   // ---- durability (parquet-committed DML, §2.9 Delta mapping) -----
@@ -347,7 +476,6 @@ final class Catalog(spark: SparkSession) {
       users: Map[String, (String, Set[String])],
       tombstones: Set[String],
       gens: Map[String, Long],
-      writeCounts: Map[String, Int],
       nextClusterId: Int)
   private var txSnapshot: TxSnapshot = null
   /** test hook: throw right after the commit-point manifest rename,
@@ -362,8 +490,7 @@ final class Catalog(spark: SparkSession) {
   def beginTx(): Unit = {
     require(!txActive, "transaction already active")
     txSnapshot = TxSnapshot(classes.toSeq, properties.toMap, indexes.toMap,
-      acl.toMap, users.toMap, tombstones.toSet, gens.toMap,
-      writeCounts.toMap, nextClusterId)
+      acl.toMap, users.toMap, tombstones.toSet, gens.toMap, nextClusterId)
     // optimistic-concurrency baseline (reference MVCC contract,
     // OTransactionOptimistic / TransactionOptimisticTest.java:79-104):
     // remember each class's committed on-disk version as of BEGIN; a
@@ -463,8 +590,9 @@ final class Catalog(spark: SparkSession) {
     users.clear(); users ++= txSnapshot.users
     tombstones.clear(); tombstones ++= txSnapshot.tombstones
     gens.clear(); gens ++= txSnapshot.gens
-    writeCounts.clear(); writeCounts ++= txSnapshot.writeCounts
     nextClusterId = txSnapshot.nextClusterId
+    // the restored versions' plans are built again on their next read
+    scans.clear(); deltas.clear()
     // postings built during the tx reflect uncommitted data
     touched.foreach(fulltext.invalidate)
     txPendingData.clear(); txPendingDrops.clear()
@@ -546,6 +674,7 @@ final class Catalog(spark: SparkSession) {
       }
       txPendingDrops.values.foreach(deleteQuiet)
       persistManifestNow(Nil) // clears the txdata entries
+      deltas.clear() // committed classes read their parquet versions
     }
     txActive = false
     txPendingData.clear(); txPendingDrops.clear()
@@ -771,6 +900,7 @@ final class Catalog(spark: SparkSession) {
   def drop(name: String): Unit = {
     val key = name.toLowerCase
     classes.remove(key)
+    scans.remove(key); deltas.remove(key)
     // a dropped class takes its metadata with it: stale properties
     // would reject inserts into a later class of the same name, stale
     // indexes/postings would replay from the manifest or serve

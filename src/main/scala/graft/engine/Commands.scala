@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -161,8 +161,11 @@ object Commands {
       declared.contains(f.toLowerCase) || noRowsYet
     val (realFields, extraFields) =
       s.fields.zip(s.values).partition { case (f, _) => isReal(f) }
-    var row = session.spark.range(1).select(
-      realFields.map { case (f, v) => litOf(v).as(f) }: _*)
+    // a local relation: the row, its validation and its append into
+    // the class's delta are evaluated on the driver, with no job
+    var row = session.spark.createDataFrame(
+        java.util.List.of(Row()), StructType(Nil))
+      .select(realFields.map { case (f, v) => litOf(v).as(f) }: _*)
     if (extraFields.nonEmpty)
       // keys lower-cased: field resolution is case-insensitive
       // everywhere else in the engine, so the overflow map must be too
@@ -184,12 +187,12 @@ object Commands {
     // `mandatory` means the field was present in the record, reference
     // `validateField:170-172`) — one batch expression pass
     Validation.validate(row, cat.propsOf(s.cls))
-    val merged =
-      // metadata check only — a zero-column table has nothing to union
-      // (running existing.isEmpty here would cost a job per INSERT)
-      if (existing.columns.isEmpty) row
-      else extend(existing).unionByName(extend(row).select(allCols.map(col): _*))
-    cat.replaceData(s.cls, merged)
+    // metadata checks only — a zero-column table has nothing to union
+    // (running existing.isEmpty here would cost a job per INSERT), and
+    // a row that adds no column appends to the class's data as it is
+    if (existing.columns.isEmpty) cat.replaceData(s.cls, row)
+    else if (allCols == existing.columns.toSeq) cat.append(s.cls, extend(row))
+    else cat.replaceData(s.cls, extend(existing).unionByName(extend(row)))
     session.hooks.fire(Hooks.AfterCreate, s.cls, row)
     one(session.spark, 1)
   }
@@ -201,7 +204,6 @@ object Commands {
     val hit = s.where
       .map(w => session.translator.compileCondLenient(table, cls, w))
       .getOrElse(lit(true))
-    val n = table.filter(hit).count()
     val declared = cat.propsOf(s.cls).map(_.name.toLowerCase).toSet
     val updated0 = s.ops.foldLeft(table.withColumn("__hit", hit)) {
       case (df, SetField(f, v))
@@ -249,9 +251,8 @@ object Commands {
         .otherwise(if (updated0.columns.contains("_version"))
           col("_version") else lit(0)))
     session.hooks.fire(Hooks.BeforeUpdate, s.cls, table.filter(hit))
-    Validation.validate(updated.filter(col("__hit")).drop("__hit"),
-      cat.propsOf(s.cls))
-    cat.replaceData(s.cls, updated.drop("__hit", "_rid", "_class"))
+    val n = rewrite(cat, s.cls, updated, lit(true),
+      Validation.violationColumn(updated, cat.propsOf(s.cls)))
     session.hooks.fire(Hooks.AfterUpdate, s.cls,
       updated.filter(col("__hit")).drop("__hit"))
     one(session.spark, n)
@@ -264,13 +265,35 @@ object Commands {
     val hit = s.where
       .map(w => session.translator.compileCondLenient(table, cls, w))
       .getOrElse(lit(true))
-    val n = table.filter(hit).count()
     session.hooks.fire(Hooks.BeforeDelete, s.cls, table.filter(hit))
-    cat.replaceData(s.cls,
-      table.filter(!coalesce(hit, lit(false))).drop("_rid", "_class"))
+    val n = rewrite(cat, s.cls, table.withColumn("__hit", hit),
+      !coalesce(col("__hit"), lit(false)), lit(null))
     session.hooks.fire(Hooks.AfterDelete, s.cls, table.filter(hit))
     one(session.spark, n)
   }
+
+  /** UPDATE/DELETE's one job: `marked` is the class's rows with `__hit`
+    * set on the statement's hits; the rows `keep` selects become the
+    * class's next version, materialised by one eager localCheckpoint.
+    * An observation below that filter carries the hit count and the
+    * first `violation` among the hit rows; a violation refuses the
+    * statement with the class unchanged. Returns the hit count. */
+  private def rewrite(cat: Catalog, cls: String, marked: DataFrame,
+      keep: Column, violation: Column): Long = {
+    val next = marked
+      .observe(Observed, count_if(col("__hit")).as("n"),
+        first(when(col("__hit"), violation), ignoreNulls = true)
+          .as("violation"))
+      .filter(keep)
+      .drop("__hit", "_rid", "_class")
+    val (stored, metrics) = cat.materialise(cls, next)
+    val m = metrics(Observed)
+    if (!m.isNullAt(1)) throw ValidationException(m.getString(1))
+    cat.replaceData(cls, stored)
+    m.getLong(0)
+  }
+
+  private val Observed = "graft_dml"
 
   /** CREATE LINK … FROM c1.f1 TO c2.f2 [INVERSE]
     * (`OCommandExecutorSQLCreateLink.java:42-159`): the reference

@@ -243,14 +243,30 @@ final class GraftSession private (val spark: SparkSession,
       org.apache.spark.sql.execution.FormattedMode)
   }
 
+  /** per class, the version [[sql]] last registered as a temp view and
+    * the view entry it made */
+  private val views = scala.collection.mutable.Map[String,
+    (ClassDef, org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation)]()
+
   /** raw Spark SQL over the catalog's classes (each registered as a
-    * temp view) — the escape hatch the reference's COMMAND op never
-    * had; full Catalyst surface. Under a principal it exposes every
-    * class at once, so it requires the wildcard READ grant. */
+    * temp view of its stored columns) — the escape hatch the
+    * reference's COMMAND op never had; full Catalyst surface. A view
+    * is registered again only when its class has a new version or the
+    * view was replaced since. Under a principal it exposes every class
+    * at once, so it requires the wildcard READ grant. */
   def sql(sqlText: String): DataFrame = {
     checkPermission("database.class.*", "READ")
-    catalog.all.foreach(c =>
-      c.provider(spark).createOrReplaceTempView(c.name))
+    val sessionCatalog = spark.sessionState.catalog
+    catalog.all.foreach { c =>
+      val key = c.name.toLowerCase
+      val current = views.get(key).exists { case (v, view) =>
+        (v eq c) && sessionCatalog.getRawTempView(c.name).exists(_ eq view)
+      }
+      if (!current) {
+        catalog.data(c.name).createOrReplaceTempView(c.name)
+        views(key) = (c, sessionCatalog.getRawTempView(c.name).get)
+      }
+    }
     spark.sql(sqlText)
   }
 
@@ -387,10 +403,10 @@ final class GraftSession private (val spark: SparkSession,
       df.select(allCols.map(c =>
         if (df.columns.contains(c)) org.apache.spark.sql.functions.col(c)
         else org.apache.spark.sql.functions.lit(null).as(c)): _*)
-    val merged =
-      if (existing.columns.isEmpty) hooked
-      else extend(existing).unionByName(extend(hooked))
-    catalog.replaceData(cls, merged)
+    if (existing.columns.isEmpty) catalog.replaceData(cls, hooked)
+    else if (allCols == existing.columns.toSeq)
+      catalog.append(cls, extend(hooked))
+    else catalog.replaceData(cls, extend(existing).unionByName(extend(hooked)))
     hooks.fire(Hooks.AfterCreate, cls, hooked)
     rows.count()
   }

@@ -442,6 +442,10 @@ object GraphOps {
           val chg = next.filter(col("f") < col("__of") ||
             col("b") < col("__ob"))
           changed = chg.count() > 0
+          // that job read every edge of the first distributed round's
+          // deduplicated e0, which now holds them in storage; the raw
+          // edges it was built from are not read again
+          if (outer == 1 && inner == 1) raw.unpersist()
           lab = next.select(col("id"), col("f"), col("b"))
         }
         // re-class by (cls, f, b). CERTIFICATION, both final same round:
@@ -480,7 +484,7 @@ object GraphOps {
       }
     }
     e0.unpersist()
-    raw.unpersist()
+    raw.unpersist() // the local finish's edges; a no-op once released
     if (done.isEmpty)
       cls.select(col("id"), col("cls").as("scc")) // empty vertex set
     else done.reduce(_ unionByName _)

@@ -234,23 +234,6 @@ object Similarity {
       when(d >= 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** LSH-bucketed approximate near-dup pairs: compare only within
-    * buckets (the scale path), verify with exact cosine. */
-  def lshCosinePairs(df: DataFrame, idCol: String, vecCol: String,
-      planes: Seq[Seq[Double]], threshold: Double): DataFrame = {
-    val v = df.select(col(idCol).as("__id"),
-      col(vecCol).cast("array<double>").as("__v"))
-      .withColumn("__bucket", lshBucket(col("__v"), planes))
-    val a = v.select(col("__bucket"), col("__id").as("a_id"),
-      col("__v").as("__va"))
-    val b = v.select(col("__bucket"), col("__id").as("b_id"),
-      col("__v").as("__vb"))
-    a.join(b, Seq("__bucket")).filter(col("a_id") < col("b_id"))
-      .withColumn("cos", round(cosine(col("__va"), col("__vb")), 6))
-      .filter(col("cos") >= threshold)
-      .select("a_id", "b_id", "cos")
-  }
-
   /** Seeded ±1 Rademacher rows for Johnson-Lindenstrauss projection
     * (Achlioptas 2003: sign entries preserve pairwise distances with
     * the same guarantee as Gaussian entries, at integer-add cost).

@@ -86,18 +86,6 @@ object TextOps {
   }
 
   // ------------------------------------------------------------ simhash
-  /** 32-bit simhash over a precomputed token-hash array column:
-    * bit b set iff Σ_tokens (bit_b(h) ? +1 : -1) > 0. Expressed with
-    * floor-division so Spark and DuckDB compute identically. */
-  def simhashExpr(hs: Column): Column =
-    (0 until 32).map { b =>
-      val contrib = aggregate(hs, lit(0L),
-        (acc, h) => acc + when(
-          pmod(floor(h / lit(math.pow(2, b))).cast("long"), lit(2L)) === 1L,
-          1L).otherwise(-1L))
-      when(contrib > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** Hamming distance between two simhash values. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
@@ -1010,9 +998,6 @@ object TextOps {
     "fr" -> Seq("le", "la", "et", "valeur", "vite"),
     "es" -> Seq("el", "la", "y", "valor", "rapido"),
     "zh" -> Seq("de", "shi", "biao", "zhi", "kuai"))
-
-  def langScore(tokens: Column, markers: Seq[String]): Column =
-    markers.map(m => size(filter(tokens, t => t === m))).reduce(_ + _)
 
   // ------------------------------------------- feature hashing
   /** Feature-hashing text embedder (the hashing trick, Weinberger et

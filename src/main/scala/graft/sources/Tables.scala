@@ -74,8 +74,4 @@ object Tables {
       spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
-
-  /** Register every table as a temp view so spark.sql(...) works too. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

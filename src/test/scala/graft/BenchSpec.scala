@@ -34,4 +34,25 @@ class BenchSpec extends AnyFunSuite {
       assert(got == want, g)
     }
   }
+
+  test("full record: every run writes one, a prefix run under target/") {
+    val root = java.nio.file.Paths.get("/repo")
+    assert(Bench.recordFile(root, Nil) == root.resolve("BENCH_FULL.json"))
+    assert(Bench.recordFile(root, Seq("qg_page", "qd_", "qg_page")) ==
+      root.resolve("target/BENCH_qd_+qg_page.json"))
+    assert(Bench.recordFile(root, Seq("a/b c")) ==
+      root.resolve("target/BENCH_a_b_c.json"))
+    val med = Seq("qd_a" -> 0.12345, "qg_b" -> -1.0)
+    val rec = Bench.fullRecord(med, Map("qd_a" -> 12L, "qg_b" -> -1L),
+      Map("qd_a" -> 3, "qg_b" -> 0), "/data/sf0.1", 0.0865)
+    val j = new ObjectMapper().readTree(rec)
+    assert(j.get("value").asDouble == 0.123)
+    assert(j.get("calibration_sec").asDouble == 0.0865)
+    val a = j.get("per_query").get("qd_a")
+    assert((a.get("sec").asDouble, a.get("mad_pct").asLong,
+      a.get("rounds").asInt) == ((0.1235, 12L, 3)))
+    val b = j.get("per_query").get("qg_b")
+    assert((b.get("sec").asInt, b.get("mad_pct").asLong,
+      b.get("rounds").asInt) == ((-1, -1L, 0)))
+  }
 }

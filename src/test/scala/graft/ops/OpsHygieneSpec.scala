@@ -188,6 +188,26 @@ class OpsHygieneSpec extends AnyFunSuite {
       "nearDupClusters must unpersist its edge cache")
   }
 
+  test("sccDF's distributed refinement frees its raw edges, no extra job") {
+    // the raw edges are released once the first distributed round has
+    // materialised their deduplicated copy, inside a job the refinement
+    // runs anyway: the job count is the one the refinement had while it
+    // held both until it returned
+    spark.catalog.clearCache()
+    val v = (1L to 8L).toDF("id")
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+      (6L, 7L), (7L, 6L), (6L, 7L)).toDF("src", "dst")
+    var got = Map.empty[Long, Long]
+    val jobs = SparkTestSession.jobsDuring {
+      got = graft.graph.GraphOps.sccDF(v, e, localFinishThreshold = 0)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert((jobs, got) == ((55, Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
+      4L -> 4L, 5L -> 5L, 6L -> 6L, 7L -> 6L, 8L -> 8L))))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "sccDF must unpersist its edge caches")
+  }
+
   test("pageRankDF leaves no cached frames behind at 10 iterations") {
     spark.catalog.clearCache()
     val v = Seq(1L, 2L, 3L).toDF("id")
